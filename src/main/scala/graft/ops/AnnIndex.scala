@@ -182,10 +182,11 @@ object AnnIndex {
     * modification times (synthetic/constant on object-store Hadoop
     * filesystems, where an mtime probe would silently never fire
     * after an in-place re-save). The generation dir name set rides
-    * along for legacy roots saved before the nonce existed. One
-    * driver listing + one tiny read — metadata cost, safe to poll
-    * per-batch. Tokens are only comparable for equality; a changed
-    * token means "reload", nothing more.
+    * along too: it also covers a crash between [[appendCorpusCodes]]'
+    * rename and its stamp. One driver listing + one tiny read —
+    * metadata cost, safe to poll per-batch. Tokens are only
+    * comparable for equality; a changed token means "reload", nothing
+    * more.
     *
     * The probe NEVER throws and NEVER heals: a concurrent
     * [[Fs.swapInStaged]] can remove the root or the nonce file
@@ -202,25 +203,16 @@ object AnnIndex {
       val root = new org.apache.hadoop.fs.Path(rootStr)
       val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
       if (!fs.exists(root)) AbsentToken
-      else {
-        val nonce =
-          try Fs.readText(spark, s"$rootStr/_generation")
-          catch {
-            // persistently missing = pre-nonce root ("legacy", a
-            // STABLE token so legacy indexes still probe by dir set);
-            // vanished mid-swap resolves as AbsentToken or a sentinel
-            // on the enclosing retry instead
-            case _: java.io.FileNotFoundException => "legacy"
-          }
-        nonce + "|" + fs.listStatus(root).filter(_.isDirectory)
+      else Fs.readText(spark, s"$rootStr/_generation") + "|" +
+        fs.listStatus(root).filter(_.isDirectory)
           .map(_.getPath.getName).sorted.mkString(",")
-      }
     } catch {
       case scala.util.control.NonFatal(_) =>
-        // mid-mutation transient (root or listing vanished between
-        // probes): report an unrepeatable token — differs from any
-        // pinned one, and from the NEXT probe, so a stability check
-        // never reloads on it
+        // mid-mutation transient (root, nonce or listing vanished
+        // between probes), or a root without a nonce ([[load]]
+        // refuses it): report an unrepeatable token — differs from
+        // any pinned one, and from the NEXT probe, so a stability
+        // check never reloads on it
         s"$TransientTokenPrefix${java.util.UUID.randomUUID()}"
     }
 
@@ -233,12 +225,15 @@ object AnnIndex {
   val TransientTokenPrefix = "transient|"
 
   def load(spark: SparkSession, path: String): Similarity.IvfPqIndex = {
-    // the index swaps as ONE unit — recovery at the root; the
-    // per-subdir recoveries heal debris from the pre-migration
-    // two-swap layout (harmless no-ops otherwise)
-    Fs.recoverAside(spark, path.stripSuffix("/"))
-    Fs.recoverAside(spark, centroidsPath(path))
-    Fs.recoverAside(spark, codebooksPath(path))
+    // the index swaps as ONE unit — recovery at the root
+    val root = path.stripSuffix("/")
+    Fs.recoverAside(spark, root)
+    if (Fs.exists(spark, root) &&
+        !Fs.exists(spark, s"$root/_generation"))
+      throw new IllegalStateException(
+        s"ANN index at $path has no _generation nonce: it was saved " +
+          "in an older on-disk format this build no longer reads — " +
+          "recreate it with AnnIndex.save")
     val centroids = spark.read.parquet(centroidsPath(path))
       .orderBy("cell").collect()
       .map(_.getSeq[Double](1).toSeq).toSeq

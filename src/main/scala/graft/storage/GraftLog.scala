@@ -28,16 +28,12 @@ object GraftLog {
     StructField("txn_app", StringType),
     StructField("txn_batch", LongType)))
 
-  /** One op-log record, driver-side. `hasTxnCols` preserves the
-    * old mergeSchema distinction between "this file predates the txn
-    * columns" and "txn fields null" for the one caller that reports
-    * them differently ([[graft.streaming.StreamingOps.lag]]). */
+  /** One op-log record, driver-side. */
   private[graft] case class OpRec(operation: String, tsMicros: Long,
                                   partitionFields: String,
                                   seq: Option[Long],
                                   txnApp: Option[String],
-                                  txnBatch: Option[Long],
-                                  hasTxnCols: Boolean) {
+                                  txnBatch: Option[Long]) {
     def timestamp: Timestamp = {
       val ts = new Timestamp(Math.floorDiv(tsMicros, 1000L))
       ts.setNanos((Math.floorMod(tsMicros, 1000000L) * 1000L).toInt)
@@ -55,11 +51,12 @@ object GraftLog {
   // a footer open per log file — paid by EVERY mutation and EVERY
   // snapshot/assertUnchanged/history on every storage query. Both are
   // one-file parquet IO, done here directly on the driver with
-  // parquet-hadoop; the on-disk format stays parquet with the same
-  // logical schema (timestamps as INT64 micros — Spark reads INT96
-  // and INT64 files side by side), so existing logs, the streaming
-  // file-source triggers watching the log dir, and external parquet
-  // readers are unaffected.
+  // parquet-hadoop. The on-disk format is ONE parquet schema
+  // ([[logFileSchema]]: INT64-micros `timestamp`, `seq`, the `txn_*`
+  // columns), so the streaming file-source triggers watching the log
+  // dir and external parquet readers see plain parquet. A log file in
+  // any other shape was written by an older build and is refused
+  // ([[readLogFile]]) with a recreate hint, never decoded.
 
   private lazy val logFileSchema: org.apache.parquet.schema.MessageType = {
     import org.apache.parquet.schema.{LogicalTypeAnnotation => LTA}
@@ -178,10 +175,9 @@ object GraftLog {
   }
 
   /** All records of the parquet files directly in `dir` (no
-    * recursion — the log is flat), tolerant of files written before
-    * the seq/txn columns existed (the old mergeSchema read's job) and
-    * of both timestamp encodings (Spark's INT96, this writer's INT64
-    * micros). UNSORTED — callers order as they need. */
+    * recursion — the log is flat). Every file must be in
+    * [[writeRecords]]' format (see [[readLogFile]]); null fields read
+    * as None. UNSORTED — callers order as they need. */
   private[graft] def readRecordsDir(spark: SparkSession,
                                     dir: String): Seq[OpRec] = {
     val conf = spark.sessionState.newHadoopConf()
@@ -208,67 +204,48 @@ object GraftLog {
       }
   }
 
+  /** Read one log file, refusing any file not in [[logFileSchema]]'s
+    * format: a `timestamp` other than INT64 micros (Spark's default
+    * 96-bit encoding, MILLIS, NANOS) or missing `txn_*` columns mark
+    * an older build's log. Decoding it would mis-time or drop records,
+    * so the refusal names the file and the fix instead. */
   private def readLogFile(conf: org.apache.hadoop.conf.Configuration,
                           path: Path): Seq[OpRec] = {
-        val out = scala.collection.mutable.ArrayBuffer.empty[OpRec]
-        val reader = org.apache.parquet.hadoop.ParquetReader
-          .builder(
-            new org.apache.parquet.hadoop.example.GroupReadSupport(),
-            path)
-          .withConf(conf).build()
-        try {
-          var g = reader.read()
-          while (g != null) {
-            val t = g.getType
-            def has(n: String): Boolean =
-              t.containsField(n) && g.getFieldRepetitionCount(n) > 0
-            def str(n: String): Option[String] =
-              if (has(n)) Some(g.getString(n, 0)) else None
-            def lng(n: String): Option[Long] =
-              if (has(n)) Some(g.getLong(n, 0)) else None
-            val tsMicros: Long =
-              if (!has("timestamp")) 0L
-              else {
-                val prim = t.getType("timestamp").asPrimitiveType()
-                prim.getPrimitiveTypeName match {
-                  case org.apache.parquet.schema.PrimitiveType
-                      .PrimitiveTypeName.INT96 =>
-                    // Spark's legacy encoding (compactLog wrote it
-                    // before this reader existed): 8B nanos-of-day LE
-                    // + 4B Julian day LE
-                    val buf = java.nio.ByteBuffer
-                      .wrap(g.getInt96("timestamp", 0).getBytes)
-                      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-                    val nanosOfDay = buf.getLong
-                    val julianDay = buf.getInt
-                    (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L
-                  case _ =>
-                    val raw = g.getLong("timestamp", 0)
-                    val unit = Option(prim.getLogicalTypeAnnotation)
-                      .collect {
-                        case a: org.apache.parquet.schema
-                            .LogicalTypeAnnotation
-                            .TimestampLogicalTypeAnnotation => a.getUnit
-                      }
-                    unit match {
-                      case Some(org.apache.parquet.schema
-                          .LogicalTypeAnnotation.TimeUnit.MILLIS) =>
-                        raw * 1000L
-                      case Some(org.apache.parquet.schema
-                          .LogicalTypeAnnotation.TimeUnit.NANOS) =>
-                        raw / 1000L
-                      case _ => raw // MICROS (this writer's encoding)
-                    }
-                }
-              }
-            out += OpRec(str("operation").orNull, tsMicros,
-              str("partition_fields").orNull, lng("seq"),
-              str("txn_app"), lng("txn_batch"),
-              hasTxnCols = t.containsField("txn_app"))
-            g = reader.read()
-          }
-        } finally reader.close()
-        out.toSeq
+    import org.apache.parquet.schema.{LogicalTypeAnnotation => LTA}
+    val out = scala.collection.mutable.ArrayBuffer.empty[OpRec]
+    val reader = org.apache.parquet.hadoop.ParquetReader
+      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
+        path)
+      .withConf(conf).build()
+    try {
+      var g = reader.read()
+      if (g != null) {
+        val t = g.getType
+        // the timestamp annotation implies INT64 (a 96-bit column has none)
+        if (!Seq("timestamp", "txn_app", "txn_batch").forall(t.containsField) ||
+            t.getType("timestamp").getLogicalTypeAnnotation !=
+              LTA.timestampType(true, LTA.TimeUnit.MICROS))
+          throw new IllegalStateException(
+            s"op-log file $path is in an older on-disk format " +
+              s"(schema: ${t.getFields.toArray.mkString("; ")}); this " +
+              "build reads only INT64-microsecond timestamps with " +
+              "txn_app/txn_batch columns — recreate the table by " +
+              "writing its data into a new managed table")
+      }
+      while (g != null) {
+        def has(n: String): Boolean =
+          g.getType.containsField(n) && g.getFieldRepetitionCount(n) > 0
+        def str(n: String): Option[String] =
+          if (has(n)) Some(g.getString(n, 0)) else None
+        def lng(n: String): Option[Long] =
+          if (has(n)) Some(g.getLong(n, 0)) else None
+        out += OpRec(str("operation").orNull, lng("timestamp").getOrElse(0L),
+          str("partition_fields").orNull, lng("seq"),
+          str("txn_app"), lng("txn_batch"))
+        g = reader.read()
+      }
+    } finally reader.close()
+    out.toSeq
   }
 
   /** The op log's records, NEWEST FIRST — the driver-side core of
@@ -358,7 +335,7 @@ object GraftLog {
     writeRecords(spark, logPath(tablePath), Seq(OpRec(operation,
       System.currentTimeMillis() * 1000L,
       partitionFields.mkString(","), Some(System.nanoTime()),
-      txn.map(_._1), txn.map(_._2), hasTxnCols = true)))
+      txn.map(_._1), txn.map(_._2))))
   }
 
   /** Highest transaction batch recorded for `appId` (Delta's
@@ -669,18 +646,16 @@ object GraftLog {
   /** The operation history, newest first (history() analogue) — a
     * LocalRelation built from the driver-side record read (the log is
     * metadata-sized by contract; [[Maintenance.compactLog]] keeps the
-    * file count bounded). The full 6-column schema is always served,
-    * with nulls where a pre-metadata log file lacked a column — the
-    * same shape the old mergeSchema read produced. */
+    * file count bounded), in the 6-column [[schema]]. */
   def history(spark: SparkSession, tablePath: String): DataFrame =
     spark.createDataFrame(
       java.util.Arrays.asList(
         records(spark, tablePath).map(recordRow): _*), schema)
 
   /** The table's recorded partitioning: newest WRITE/MERGE/ALTER
-    * entry's partition_fields (empty for unpartitioned or
-    * pre-metadata logs). ALTER counts because renaming a partition
-    * column rewrites the layout under the new name. */
+    * entry's partition_fields (empty for unpartitioned tables). ALTER
+    * counts because renaming a partition column rewrites the layout
+    * under the new name. */
   def lastPartitioning(spark: SparkSession, tablePath: String): Seq[String] =
     records(spark, tablePath)
       .find(r => Set("WRITE", "MERGE", "ALTER")(r.operation))

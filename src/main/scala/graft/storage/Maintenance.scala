@@ -533,12 +533,8 @@ object Maintenance {
         // and a second compaction is a genuine no-op
         val opRec = GraftLog.OpRec("LOG_COMPACT",
           System.currentTimeMillis() * 1000L, "",
-          Some(System.nanoTime()), None, None, hasTxnCols = true)
+          Some(System.nanoTime()), None, None)
         try {
-          // the driver-side record read is mergeSchema-equivalent (a
-          // pre-metadata log keeps newer entries' columns, missing
-          // fields read null); one driver-written file replaces the
-          // old coalesce(1) Spark job
           GraftLog.writeRecords(spark, tmp,
             GraftLog.readRecordsDir(spark, lp)
               .sortBy(r => (r.tsMicros, r.seq.getOrElse(Long.MinValue)))

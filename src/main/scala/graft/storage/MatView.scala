@@ -114,11 +114,9 @@ case class MatViewRefresh(mode: String, batchesApplied: Long,
   * would rewrite the whole state parquet, quietly dominating every
   * refresh. The state is therefore hash-bucketed by key
   * ([[StateBucketsKey]] buckets, fixed at create) into immutable
-  * GENERATION dirs `g<gen>/b<bucket>` (generation-outer since round
-  * 16 — the staged generation publishes with ONE atomic dir rename
-  * and one birth stamp; older bucket-outer `b<bucket>/g<gen>` trees
-  * stay fully readable and committable, see [[bucketDirName]]),
-  * resolved through a manifest in
+  * GENERATION dirs `g<gen>/b<bucket>` (generation-outer, so the
+  * staged generation publishes with ONE atomic dir rename and one
+  * birth stamp, see [[bucketDirName]]), resolved through a manifest in
   * the sidecar (`bucketGens`). An incremental refresh reads ONLY the
   * buckets its delta keys hash to (a key absent from the delta cannot
   * live elsewhere — same hash), stages their new generation, and
@@ -131,6 +129,11 @@ case class MatViewRefresh(mode: String, batchesApplied: Long,
   * REJECTED: its heal rolls completed leaf swaps forward while the
   * sidecar still holds the old watermark, so a crash mid-commit
   * would double-fold the same deltas on the next refresh.
+  *
+  * ON-DISK FORMAT: one epoch. The sidecar records it (`layout` =
+  * [[Layout]], `buckets` >= 1); a view written in any other format —
+  * the single-dir or bucket-outer trees of older builds — is refused
+  * with a recreate hint by every load, never read or committed.
   *
   * CRASHED-WRITER WINDOW (named, not silent): a source writer that
   * dies after its data swap landed but before its op-log append
@@ -163,11 +166,10 @@ object MatView {
   val LockWaitKey = "spark.graft.matviewLockWaitMs"
   val LockWaitDefaultMs: Long = 10000L
 
-  /** How many hash buckets a NEW view's state is split into. The
-    * refresh commit then rewrites only the buckets containing
+  /** How many hash buckets a NEW view's state is split into (>= 1).
+    * The refresh commit then rewrites only the buckets containing
     * changed/rescanned keys — |changes|-bucket-sized, never
-    * |state|-sized (see BUCKETED STATE below). 0 would mean the
-    * legacy single-dir layout; only pre-existing sidecars carry it. */
+    * |state|-sized (see BUCKETED STATE in the object doc). */
   val StateBucketsKey = "spark.graft.matviewStateBuckets"
   val StateBucketsDefault: Int = 32
 
@@ -201,6 +203,11 @@ object MatView {
   private val InvisibleOps = Set("OPTIMIZE", "ADD_CONSTRAINT",
     "DROP_CONSTRAINT", "LOG_COMPACT")
 
+  /** The one state-tree layout this build reads and writes
+    * (generation-outer `g<gen>/b<bucket>`), stamped into every
+    * sidecar; any other value is an older format and is refused. */
+  private val Layout = 2
+
   /** `schemaJson` is the state schema as Spark schema-JSON — the
     * empty-view lifeline: an all-rows-deleted refresh writes a parquet
     * dir with ZERO part files (Spark writes none for an empty frame),
@@ -211,21 +218,20 @@ object MatView {
     * `keyPhys`/`valuePhys` are the columns' PHYSICAL names at create
     * time (identity unless the source carries a column mapping) — the
     * stable identity a later mapped RENAME re-resolves through.
-    * `minMax` selects the state shape (see the object doc). */
-  /** `buckets`/`stateGen`/`bucketGens` describe the BUCKETED state
-    * layout (see the object doc): `buckets` = hash-bucket count fixed
-    * at create (0 = pre-bucketing single-dir layout, read-compatible),
-    * `stateGen` = monotone refresh counter, `bucketGens` = the live
-    * generation per non-empty bucket — the manifest readers resolve
-    * state dirs through. */
+    * `minMax` selects the state shape (see the object doc).
+    *
+    * `buckets`/`stateGen`/`bucketGens` describe the BUCKETED state
+    * (see the object doc): `buckets` = hash-bucket count fixed at
+    * create, `stateGen` = monotone refresh counter, `bucketGens` = the
+    * live generation per non-empty bucket — the manifest readers
+    * resolve state dirs through. */
   case class Meta(source: String, keys: Seq[String],
                   valueCols: Seq[String], minMax: Boolean,
                   lastBatch: Long, logEntries: Long, logMaxSeq: Long,
                   schemaJson: String, keyPhys: Seq[String],
-                  valuePhys: Seq[String], buckets: Int = 0,
+                  valuePhys: Seq[String], buckets: Int,
                   stateGen: Long = 0L,
-                  bucketGens: Map[Int, Long] = Map.empty,
-                  layout: Int = 2) {
+                  bucketGens: Map[Int, Long] = Map.empty) {
     /** Single-value views keep the unsuffixed legacy stat names. */
     def statName(stat: String, c: String): String =
       if (valueCols.size == 1) stat else s"${stat}_$c"
@@ -249,7 +255,7 @@ object MatView {
         ("stateGen" -> m.stateGen) ~
         ("bucketGens" -> m.bucketGens.map {
           case (b, g) => b.toString -> g }) ~
-        ("layout" -> m.layout)))
+        ("layout" -> Layout)))
   }
 
   private def saveMetaInto(spark: SparkSession, dir: String,
@@ -268,7 +274,7 @@ object MatView {
     if (!Fs.exists(spark, sc))
       throw new IllegalArgumentException(
         s"$viewPath is not a materialized view (no $SidecarName)")
-    parseMeta(Fs.readText(spark, sc))
+    parseMeta(viewPath, Fs.readText(spark, sc))
   }
 
   /** READ-ONLY meta load for pollers ([[graft.streaming.StreamingOps
@@ -278,13 +284,13 @@ object MatView {
     * maintainer's in-flight swap BACK and fail its commit. Some
     * complete sidecar exists at every instant (the swap contract), so
     * a lock-free reader just looks in order: live, the sidecar's own
-    * aside, the view ROOT's aside (a rebuild swaps the whole dir). */
+    * aside, the view ROOT's aside (a rebuild swaps the whole dir
+    * through [[Fs.swapInStaged]], whose aside is `__old`). */
   private[graft] def loadMetaReadOnly(spark: SparkSession,
                                       viewPath: String): Meta = {
     val base = viewPath.stripSuffix("/")
     val sc = sidecarPath(base)
-    val candidates = Seq(sc, sc + "__old",
-      base + "__old/" + SidecarName, base + "__graft_old/" + SidecarName)
+    val candidates = Seq(sc, sc + "__old", base + "__old/" + SidecarName)
     // the exists→read pair races the maintainer's swap (a candidate
     // can vanish in between — race-tolerant, move on), and ONE scan
     // can thread a swap's renames so every probe individually misses
@@ -295,14 +301,16 @@ object MatView {
     // staged sidecar is visible): a clean first scan that found no
     // sidecar and no swap is authoritative, so the common
     // not-a-view probe (every replica lag poll) pays 5 existence
-    // checks and zero sleeps.
+    // checks (3 candidates + the 2 swap-evidence probes below) and
+    // zero sleeps.
     var scan = 0
     var evidence = false
     while (scan < 3) {
       scan += 1
       candidates.foreach { p =>
         try {
-          if (Fs.exists(spark, p)) return parseMeta(Fs.readText(spark, p))
+          if (Fs.exists(spark, p))
+            return parseMeta(viewPath, Fs.readText(spark, p))
         } catch {
           case e if Txn.isSwapWindowRace(e) => evidence = true
         }
@@ -332,56 +340,47 @@ object MatView {
       s"$viewPath is not a materialized view (no $SidecarName)")
   }
 
-  private def parseMeta(text: String): Meta = {
+  /** Parse a sidecar of THIS build's on-disk format. Every field is
+    * required: a missing one, a `layout` other than [[Layout]], or
+    * `buckets` < 1 marks an older format (or a damaged sidecar) and is
+    * refused with the fix in the message — never defaulted into a
+    * half-read of a tree this build does not write. */
+  private def parseMeta(viewPath: String, text: String): Meta = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
     val j = JsonMethods.parse(text)
-    def str(f: String) = (j \ f) match {
-      case JString(s) => s
-      case _ => throw new IllegalStateException(s"matview sidecar: $f")
-    }
-    def lng(f: String) = (j \ f) match {
+    def refuse(why: String): Nothing =
+      throw new IllegalStateException(
+        s"materialized view $viewPath: $why; this build reads only the " +
+          "current on-disk format — remove the view and recreate it")
+    def field[T](f: String)(pf: PartialFunction[JValue, T]): T =
+      pf.applyOrElse(j \ f,
+        (_: JValue) => refuse(s"sidecar field '$f' is missing or ill-typed"))
+    def str(f: String) = field(f) { case JString(s) => s }
+    def lng(f: String) = field(f) {
       case JInt(i) => i.toLong
       case JLong(l) => l
-      case _ => throw new IllegalStateException(s"matview sidecar: $f")
     }
-    def strs(f: String): Option[Seq[String]] = (j \ f) match {
-      case JArray(items) => Some(items.collect { case JString(s) => s })
-      case _ => None
+    def strs(f: String) = field(f) {
+      case JArray(items) => items.collect { case JString(s) => s }
     }
-    val keys = strs("keys").getOrElse(
-      throw new IllegalStateException("matview sidecar: keys"))
-    // pre-round-13 sidecars carried a single `valueCol` and no
-    // physical names (identity mapping at the time) — read them as
-    // the equivalent one-column min/max view
-    val valueCols = strs("valueCols").getOrElse(Seq(str("valueCol")))
-    val minMax = (j \ "minMax") match {
-      case JBool(b) => b
-      case _ => true
-    }
-    // pre-bucketing sidecars carry no layout fields — read them as
-    // the legacy single-dir layout (buckets = 0)
-    def lngOpt(f: String): Option[Long] = (j \ f) match {
-      case JInt(i) => Some(i.toLong)
-      case JLong(l) => Some(l)
-      case _ => None
-    }
-    val bucketGens: Map[Int, Long] = (j \ "bucketGens") match {
+    val layout = lng("layout")
+    if (layout != Layout)
+      refuse(s"state layout $layout (this build reads layout $Layout)")
+    val buckets = lng("buckets").toInt
+    if (buckets < 1)
+      refuse(s"$buckets state buckets (the single-dir state layout)")
+    val bucketGens = field("bucketGens") {
       case JObject(fields) => fields.collect {
         case (b, JInt(g)) => b.toInt -> g.toLong
         case (b, JLong(g)) => b.toInt -> g
       }.toMap
-      case _ => Map.empty
     }
-    Meta(str("source"), keys, valueCols, minMax, lng("lastBatch"),
-      lng("logEntries"), lng("logMaxSeq"), str("schemaJson"),
-      strs("keyPhys").getOrElse(keys),
-      strs("valuePhys").getOrElse(valueCols),
-      lngOpt("buckets").map(_.toInt).getOrElse(0),
-      lngOpt("stateGen").getOrElse(0L), bucketGens,
-      // a sidecar without the field predates the generation-outer
-      // layout — its on-disk tree is bucket-outer (layout 1)
-      lngOpt("layout").map(_.toInt).getOrElse(1))
+    Meta(str("source"), strs("keys"), strs("valueCols"),
+      field("minMax") { case JBool(b) => b },
+      lng("lastBatch"), lng("logEntries"), lng("logMaxSeq"),
+      str("schemaJson"), strs("keyPhys"), strs("valuePhys"), buckets,
+      lng("stateGen"), bucketGens)
   }
 
   // --------------------------------------------------------- partials
@@ -442,25 +441,18 @@ object MatView {
   private def bucketIdCol(m: Meta): Column =
     pmod(xxhash64(m.keys.map(col): _*), lit(m.buckets.toLong)).cast("int")
 
-  /** Per-layout state-dir naming — zero-padded for stable listings;
-    * the names carry no `=` so nothing ever partition-infers them.
-    *
-    *  - layout 2 (every view written since round 16):
-    *    `g000000000012/b00007` — GENERATION-outer, so an incremental
-    *    commit publishes its whole generation with ONE atomic dir
-    *    rename and ONE birth stamp (guide §6 metadata-op budget: the
-    *    old bucket-outer commit paid |affected buckets| renames +
-    *    stamps + mkdirs + exists probes per refresh — 32 at default
-    *    buckets, multiplied on object stores where rename is a copy).
-    *  - layout 1 (bucket-outer, `b00007/g000000000012`): read AND
-    *    commit compatibility for trees written by older rounds; only
-    *    a pre-existing sidecar without a `layout` field selects it.
-    *    A REBUILD replaces the whole tree and upgrades to layout 2. */
-  private def bucketDirName(m: Meta, bucket: Int, gen: Long): String =
-    if (m.layout >= 2) f"g$gen%012d/b$bucket%05d"
-    else f"b$bucket%05d/g$gen%012d"
-
+  /** State-dir naming (layout [[Layout]]) — zero-padded for stable
+    * listings; the names carry no `=` so nothing ever partition-infers
+    * them. `g000000000012/b00007` is GENERATION-outer, so an
+    * incremental commit publishes its whole generation with ONE atomic
+    * dir rename and ONE birth stamp (guide §6 metadata-op budget: a
+    * bucket-outer tree would pay |affected buckets| renames + stamps +
+    * mkdirs + exists probes per refresh — 32 at default buckets,
+    * multiplied on object stores where rename is a copy). */
   private def genDirName(gen: Long): String = f"g$gen%012d"
+
+  private def bucketDirName(bucket: Int, gen: Long): String =
+    genDirName(gen) + f"/b$bucket%05d"
 
   /** Zero-row state frame with the sidecar's recorded schema — the
     * all-groups-deleted (or brand-new-bucket) lifeline. */
@@ -481,14 +473,14 @@ object MatView {
     val dirs = m.bucketGens.toSeq
       .filter { case (b, _) => affected.forall(_.contains(b)) }
       .sortBy(_._1)
-      .map { case (b, g) => s"$base/${bucketDirName(m, b, g)}" }
+      .map { case (b, g) => s"$base/${bucketDirName(b, g)}" }
     if (dirs.isEmpty) emptyState(spark, m)
     else spark.read.parquet(dirs: _*)
   }
 
   /** Write `state` hash-bucketed under `intoDir` as generation `gen`
-    * dirs (layout 2: `g<gen>/b<i>`; layout 1: `b<i>/g<gen>`), one file
-    * per bucket (the repartition keys each bucket to one task).
+    * dirs `g<gen>/b<i>`, one file per bucket (the repartition keys
+    * each bucket to one task).
     * Returns the bucket ids that got rows — a bucket with no surviving
     * keys stages nothing. */
   private def stageBuckets(spark: SparkSession, state: DataFrame,
@@ -510,23 +502,15 @@ object MatView {
     // fresh crash orphan with batched mtimes could otherwise age
     // instantly past grace while a reader resolved through the
     // previous sidecar still scans it). Underscore-named — parquet
-    // reads never see it. Layout 2 stamps the GENERATION dir once
-    // (all its buckets are born together); layout 1 stamps each
-    // bucket's gen dir, the pre-round-16 shape its sweep ages by.
-    val born = System.currentTimeMillis()
-    if (m.layout >= 2) {
-      val genDir = s"${intoDir.stripSuffix("/")}/${genDirName(gen)}"
-      fs.mkdirs(new org.apache.hadoop.fs.Path(genDir))
-      Fs.touch(spark, s"$genDir/$GenBornPrefix$born")
-      ids.foreach { b =>
-        Fs.renameChecked(spark, s"$stage/$BucketCol=$b",
-          genDir + f"/b$b%05d")
-      }
-    } else ids.foreach { b =>
-      Fs.touch(spark, s"$stage/$BucketCol=$b/$GenBornPrefix$born")
-      val target = s"${intoDir.stripSuffix("/")}/${bucketDirName(m, b, gen)}"
-      fs.mkdirs(new org.apache.hadoop.fs.Path(target).getParent)
-      Fs.renameChecked(spark, s"$stage/$BucketCol=$b", target)
+    // reads never see it. The GENERATION dir is stamped once (all its
+    // buckets are born together).
+    val root = intoDir.stripSuffix("/")
+    val genDir = s"$root/${genDirName(gen)}"
+    fs.mkdirs(new org.apache.hadoop.fs.Path(genDir))
+    Fs.touch(spark, s"$genDir/$GenBornPrefix${System.currentTimeMillis()}")
+    ids.foreach { b =>
+      Fs.renameChecked(spark, s"$stage/$BucketCol=$b",
+        s"$root/${bucketDirName(b, gen)}")
     }
     Fs.deleteChecked(spark, stage)
     ids
@@ -537,16 +521,15 @@ object MatView {
     * [[sweepStaleGens]]. */
   private[storage] val GenBornPrefix = "_graft_born_"
 
-  /** Sweep state-generation debris: any `b<i>/g<gen>` dir the manifest does
-    * not reference is either a superseded generation or a crashed
+  /** Sweep state-generation debris: any `g<gen>/b<i>` dir the manifest
+    * does not reference is either a superseded generation or a crashed
     * commit's orphan — deletable, but only past the grace age
     * ([[GenGraceKey]]): a lock-free reader that resolved its file
     * list through the PREVIOUS sidecar gets that window to finish.
-    * Metadata-sized (one listing per bucket dir); called on the
-    * refresh's mutation paths, never on noop polls. */
+    * Metadata-sized (one base listing plus one per generation dir);
+    * called on the refresh's mutation paths, never on noop polls. */
   private def sweepStaleGens(spark: SparkSession, base: String,
                              m: Meta): Unit = {
-    if (m.buckets <= 0) return
     val grace = spark.conf.getOption(GenGraceKey).map(_.toLong)
       .getOrElse(GenGraceDefaultMs)
     val now = System.currentTimeMillis()
@@ -573,7 +556,7 @@ object MatView {
     // (synthetic / upload-batched on object stores: a fresh crash
     // orphan could otherwise age instantly past grace under a reader
     // still resolving through the previous sidecar). Mtime only as
-    // the back-compat fallback for pre-stamp debris.
+    // the fallback for a generation dir that carries no stamp.
     def bornIn(names: Seq[String]): Option[Long] = names.collectFirst {
       case n if n.startsWith(GenBornPrefix) =>
         n.stripPrefix(GenBornPrefix).toLongOption
@@ -588,12 +571,11 @@ object MatView {
       if (n < 0) n = fs.getFileStatus(p).getModificationTime
       n
     }
-    if (m.layout >= 2) gcGuard(base) {
-      // generation-outer: one listing of the base names the on-disk
-      // generations (live ones + in-grace debris — refresh-cadence
-      // bounded); each gen dir's single stamp ages ALL its buckets,
-      // which matches the layout-1 semantics exactly (a commit's
-      // bucket dirs were all stamped with the same millis).
+    gcGuard(base) {
+      // one listing of the base names the on-disk generations (live
+      // ones + in-grace debris — refresh-cadence bounded); each gen
+      // dir's single stamp ages ALL its buckets (a commit's buckets
+      // are born together).
       Fs.listSubdirs(spark, base).foreach { gd =>
         gd.stripPrefix("g").toLongOption
           .filter(_ => gd.startsWith("g")).foreach { g =>
@@ -619,27 +601,6 @@ object MatView {
                     Fs.delete(spark, s"$base/$gd/$bd")
                   }
                 }
-              }
-            }
-          }
-        }
-      }
-    } else gcGuard(base) {
-      Fs.listSubdirs(spark, base).foreach { bd =>
-        bd.stripPrefix("b").toIntOption
-          .filter(_ => bd.startsWith("b")).foreach { b =>
-          val live = m.bucketGens.get(b)
-          Fs.listSubdirs(spark, s"$base/$bd").foreach { gd =>
-            gd.stripPrefix("g").toLongOption
-              .filter(_ => gd.startsWith("g")).foreach { g =>
-              if (!live.contains(g)) gcGuard(s"$base/$bd/$gd") {
-                val p = new org.apache.hadoop.fs.Path(s"$base/$bd/$gd")
-                val names = fs.listStatus(p).map(_.getPath.getName).toSeq
-                val age = bornIn(names) match {
-                  case Some(b) => now - b
-                  case None => now - newestUnder(p)
-                }
-                if (age > grace) Fs.delete(spark, p.toString)
               }
             }
           }
@@ -705,8 +666,12 @@ object MatView {
       "materialized view needs at least one value column")
     require(valueCols.distinct.size == valueCols.size,
       s"duplicate value column in ${valueCols.mkString(", ")}")
+    val nBuckets = spark.conf.getOption(StateBucketsKey)
+      .map(_.toInt).getOrElse(StateBucketsDefault)
+    require(nBuckets >= 1,
+      s"$StateBucketsKey must be >= 1 (got $nBuckets)")
     val probe = Meta("", keys, valueCols, withMinMax, 0L, 0L, 0L, "",
-      keys, valueCols)
+      keys, valueCols, nBuckets)
     val reserved = reservedNames(probe)
     val clash = keys.filter(k => reserved(k.toLowerCase))
     require(clash.isEmpty,
@@ -729,14 +694,9 @@ object MatView {
     // re-resolves instead of rebuilding into an unresolved-column error
     val mapping = ColumnMapping.load(spark, source.stripSuffix("/"))
       .getOrElse(ColumnMapping.Mapping(Map.empty, Nil))
-    val nBuckets = spark.conf.getOption(StateBucketsKey)
-      .map(_.toInt).getOrElse(StateBucketsDefault)
-    require(nBuckets >= 1,
-      s"$StateBucketsKey must be >= 1 (got $nBuckets)")
-    val meta0 = Meta(source.stripSuffix("/"), keys, valueCols,
-      withMinMax, Long.MinValue, 0L, 0L, "",
-      keys.map(mapping.physicalOf), valueCols.map(mapping.physicalOf),
-      buckets = nBuckets)
+    val meta0 = probe.copy(source = source.stripSuffix("/"),
+      lastBatch = Long.MinValue, keyPhys = keys.map(mapping.physicalOf),
+      valuePhys = valueCols.map(mapping.physicalOf))
     withRetries(maxAttempts) {
       rebuildOnce(spark, storage, base, meta0)
     }
@@ -750,12 +710,8 @@ object MatView {
     * the sidecar's recorded schema instead of dying in inference. */
   def read(spark: SparkSession, viewPath: String): DataFrame = {
     val base = viewPath.stripSuffix("/")
-    val meta = loadMeta(spark, base) // recovers the base + sidecar asides
-    if (meta.buckets > 0) readState(spark, base, meta)
-    else if (Fs.listFiles(spark, base)
-        .exists(f => !f.startsWith("_") && !f.startsWith(".")))
-      spark.read.parquet(base) // pre-bucketing single-dir layout
-    else emptyState(spark, meta)
+    // loadMeta recovers the base + sidecar asides
+    readState(spark, base, loadMeta(spark, base))
   }
 
   // ---------------------------------------------------------- refresh
@@ -980,8 +936,7 @@ object MatView {
     val deltas0 = feed.groupBy(keys.map(col): _*)
       .agg(deltaAggs.head, deltaAggs.tail: _*)
 
-    val bucketed = meta.buckets > 0
-    if (bucketed) sweepStaleGens(spark, viewBase, meta)
+    sweepStaleGens(spark, viewBase, meta)
     // The delta must be materialized once (the affected-bucket probe
     // and the fold join would otherwise each re-run the feed scan),
     // and the buckets this refresh touches must be known BEFORE the
@@ -1000,18 +955,16 @@ object MatView {
     // blocks — the delta may be large, and |delta| rows never belong
     // on the driver.
     val newBatchBytes: Long =
-      if (!bucketed) 0L
-      else committed.filter(_ > meta.lastBatch).map { b =>
+      committed.filter(_ > meta.lastBatch).map { b =>
         Fs.dataFiles(spark,
           s"${source.stripSuffix("/")}/${Merge.ChangesDirName}/batch=$b")
           .map(_._2).sum
       }.sum
-    val localDelta = bucketed && newBatchBytes <=
+    val localDelta = newBatchBytes <=
       spark.conf.getOption(LocalDeltaBytesKey).map(_.toLong)
         .getOrElse(LocalDeltaBytesDefault)
     val (deltas, affected: Set[Int], localRows: Option[Array[org.apache.spark.sql.Row]]) =
-      if (!bucketed) (deltas0, Set.empty[Int], None)
-      else if (localDelta) {
+      if (localDelta) {
         // ONE collect carries the delta rows AND each row's bucket id
         // (bucketIdCol must evaluate through Spark — xxhash64 over the
         // internal row encoding — so it rides the same job instead of
@@ -1031,9 +984,7 @@ object MatView {
           .collect().map(_.getInt(0)).toSet
         (d, aff, None)
       }
-    val stateSide =
-      if (bucketed) readState(spark, viewBase, meta, Some(affected))
-      else read(spark, viewBase)
+    val stateSide = readState(spark, viewBase, meta, Some(affected))
     val s = stateSide.withColumn("_s", lit(true))
     val d = deltas.withColumn("_d", lit(true))
 
@@ -1226,11 +1177,7 @@ object MatView {
     val newMeta = meta.copy(lastBatch = committed.max,
       logEntries = snap.entries, logMaxSeq = snap.maxSeq,
       schemaJson = newState.schema.json)
-    if (bucketed)
-      commitIncremental(spark, viewBase, newState, newMeta, snap, affected)
-    else
-      commitState(spark, viewBase, newState, newMeta, snap,
-        "MATVIEW REFRESH")
+    commitIncremental(spark, viewBase, newState, newMeta, snap, affected)
     MatViewRefresh("incremental", committed.size.toLong, nRescan)
   }
 
@@ -1262,23 +1209,12 @@ object MatView {
     val tmp = viewBase + "__tmp"
     Fs.deleteChecked(spark, tmp)
     try {
-      val stamped =
-        if (newMeta.buckets > 0) {
-          // bucketed layout: the full swap replaces the whole tree,
-          // so old generations leave with the aside — no debris.
-          // The replacement tree is always written GENERATION-outer
-          // (layout 2): a rebuild is the one moment a layout-1 view
-          // upgrades for free, since nothing of the old tree survives.
-          val up = newMeta.copy(layout = math.max(newMeta.layout, 2))
-          val gen = up.stateGen + 1
-          val ids = stageBuckets(spark, state, up, tmp, gen)
-          up.copy(stateGen = gen,
-            bucketGens = ids.map(_ -> gen).toMap)
-        } else {
-          state.write.mode("overwrite").parquet(tmp)
-          newMeta
-        }
-      saveMetaInto(spark, tmp, stamped)
+      // the full swap replaces the whole tree, so old generations
+      // leave with the aside — no debris
+      val gen = newMeta.stateGen + 1
+      val ids = stageBuckets(spark, state, newMeta, tmp, gen)
+      saveMetaInto(spark, tmp, newMeta.copy(stateGen = gen,
+        bucketGens = ids.map(_ -> gen).toMap))
       // a rebuild's root swap must not shed the live maintenance
       // stream's lease (the Txn lock-carry rule)
       MaintainerLease.carryInto(spark, viewBase, tmp)
@@ -1294,6 +1230,18 @@ object MatView {
     }
   }
 
+  /** Highest generation number present ON DISK — crashed attempts'
+    * orphans included. Allocating the next gen above
+    * this (not just above the sidecar's stateGen) means a retry after
+    * an in-process commit failure never collides with its own orphan
+    * dirs, so the commit path needs no destructive pre-delete (which
+    * could remove a racing refresher's freshly-committed generation).
+    * ONE driver listing of the base (generation-outer tree). */
+  private def maxGenOnDisk(spark: SparkSession, base: String): Long =
+    Fs.listSubdirs(spark, base).filter(_.startsWith("g"))
+      .flatMap(_.stripPrefix("g").toLongOption)
+      .maxOption.getOrElse(0L)
+
   /** Commit an incremental refresh of a BUCKETED view: stage only the
     * affected buckets' new generation, gate exactly as [[commitState]]
     * (reads complete → source lock free → log unmoved), rename the
@@ -1303,7 +1251,7 @@ object MatView {
     * leaves only unreferenced generation debris ([[sweepStaleGens]]'s
     * to grace-sweep); after it, the superseded generations are the
     * debris. The commit WRITE is therefore |affected buckets|-sized
-    * where the pre-bucketing layout's was |state|-sized — and there
+    * where a single-dir state's would be |state|-sized — and there
     * is no partial-commit window in which the next refresh could see
     * a half-applied fold. (A per-bucket PartitionSwap-style commit
     * was rejected for exactly that hazard: its heal rolls completed
@@ -1311,34 +1259,12 @@ object MatView {
     * watermark, so a crash mid-commit would make the next refresh
     * fold the same delta batches into the already-folded buckets —
     * silent double-counting.) */
-  /** Highest generation number present ON DISK under any bucket dir —
-    * crashed attempts' orphans included. Allocating the next gen above
-    * this (not just above the sidecar's stateGen) means a retry after
-    * an in-process commit failure never collides with its own orphan
-    * dirs, so the commit path needs no destructive pre-delete (which
-    * could remove a racing refresher's freshly-committed generation).
-    * Driver listing, bucket-count-sized. */
-  private def maxGenOnDisk(spark: SparkSession, base: String,
-                           m: Meta): Long =
-    if (m.layout >= 2)
-      // generation-outer: ONE base listing names every on-disk
-      // generation, orphans included
-      Fs.listSubdirs(spark, base).filter(_.startsWith("g"))
-        .flatMap(_.stripPrefix("g").toLongOption)
-        .maxOption.getOrElse(0L)
-    else
-      Fs.listSubdirs(spark, base).filter(_.startsWith("b")).flatMap { bd =>
-        Fs.listSubdirs(spark, s"$base/$bd")
-          .filter(_.startsWith("g"))
-          .flatMap(_.stripPrefix("g").toLongOption)
-      }.maxOption.getOrElse(0L)
-
   private def commitIncremental(spark: SparkSession, viewBase: String,
                                 state: DataFrame, newMeta: Meta,
                                 snap: OpLogSnapshot,
                                 affected: Set[Int]): Unit = {
     val gen = math.max(newMeta.stateGen,
-      maxGenOnDisk(spark, viewBase, newMeta)) + 1
+      maxGenOnDisk(spark, viewBase)) + 1
     val stage = viewBase + "__genstage"
     Fs.deleteChecked(spark, stage)
     try {
@@ -1364,39 +1290,21 @@ object MatView {
         throw new StaleSnapshotException(
           s"MATVIEW REFRESH of $viewBase: another refresher committed " +
             s"generation $gen first — re-plan")
-      val fs = new org.apache.hadoop.fs.Path(viewBase)
-        .getFileSystem(spark.sessionState.newHadoopConf())
       // gen was allocated above every on-disk generation, so a target
       // existing here means a SIMULTANEOUS refresher (outside the
       // documented single-maintainer contract) allocated the same
       // number after our listing — refuse retryably, touching NOTHING
       // (a destructive clear here could delete the racer's freshly-
       // committed live generation; local-FS rename onto an existing
-      // dir would nest and double-count)
-      if (newMeta.layout >= 2) {
-        // generation-outer commit: the whole staged generation
-        // publishes with ONE existence probe + ONE atomic dir rename —
-        // where the layout-1 path paid |affected| probes + mkdirs +
-        // renames (guide §6: 32 metadata ops per refresh at default
-        // buckets, each a copy on object stores)
-        val target = s"$viewBase/${genDirName(gen)}"
-        if (Fs.exists(spark, target))
-          throw new StaleSnapshotException(
-            s"MATVIEW REFRESH of $viewBase: generation $gen appeared " +
-              "concurrently — a second refresher is racing this one; " +
-              "re-plan")
-        Fs.renameChecked(spark, s"$stage/${genDirName(gen)}", target)
-      } else ids.foreach { b =>
-        val target = s"$viewBase/${bucketDirName(newMeta, b, gen)}"
-        if (Fs.exists(spark, target))
-          throw new StaleSnapshotException(
-            s"MATVIEW REFRESH of $viewBase: generation $gen appeared " +
-              "concurrently — a second refresher is racing this one; " +
-              "re-plan")
-        fs.mkdirs(new org.apache.hadoop.fs.Path(target).getParent)
-        Fs.renameChecked(spark,
-          s"$stage/${bucketDirName(newMeta, b, gen)}", target)
-      }
+      // dir would nest and double-count). The whole staged generation
+      // publishes with ONE existence probe + ONE atomic dir rename.
+      val target = s"$viewBase/${genDirName(gen)}"
+      if (Fs.exists(spark, target))
+        throw new StaleSnapshotException(
+          s"MATVIEW REFRESH of $viewBase: generation $gen appeared " +
+            "concurrently — a second refresher is racing this one; " +
+            "re-plan")
+      Fs.renameChecked(spark, s"$stage/${genDirName(gen)}", target)
       // an affected bucket that staged nothing lost its last key —
       // drop it from the manifest (the old generation becomes debris)
       val emptied = affected -- ids
@@ -1455,9 +1363,4 @@ object MatView {
     // by the next look — Txn.retryTransient retries bounded and
     // rethrows genuine failures loudly.
     Txn.retryTransient(maxAttempts)(body)
-
-  /** See [[Txn.isSwapWindowRace]] — kept here as the historical name
-    * the specs pin the classification contract through. */
-  private[storage] def isSwapWindowRace(e: Throwable): Boolean =
-    Txn.isSwapWindowRace(e)
 }

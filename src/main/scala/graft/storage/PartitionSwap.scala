@@ -221,10 +221,11 @@ object PartitionSwap {
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) Nil
     else if (fs.getFileStatus(p).isFile)
-      // legacy single-file manifest (first shape this record shipped
-      // as): still honored, or an aside persisted under the old build
-      // would heal without its born rollback
-      Fs.readText(spark, dir).linesIterator.filter(_.nonEmpty).toSeq
+      // an older build's single-file record: healing without its born
+      // rollback would leave created partitions behind — refuse
+      throw new IllegalStateException(
+        s"partition swap record $dir is in an older on-disk format " +
+          "this build no longer reads — recreate the table")
     else Fs.listFiles(spark, dir).filter(_.startsWith("born-"))
       .map(f => Fs.readText(spark, s"$dir/$f").trim)
       .filter(_.nonEmpty)

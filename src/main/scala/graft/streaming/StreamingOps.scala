@@ -1289,25 +1289,18 @@ object StreamingOps {
           incs.map(n => s"$base/corpus_codes_inc-$n")
       val missing = source.map { src =>
         val srcCnt = spark.read.parquet(src.stripSuffix("/")).count()
+        // one coded row per (vector, probed cell) — corpusSpill
+        // assigns a vector to several cells — so coverage counts
+        // DISTINCT vector ids (`__cid`, the stored id column), not rows
         val coded =
           if (codeDirs.isEmpty) 0L
-          else {
-            // one coded row per (vector, probed cell) — corpusSpill
-            // assigns a vector to several cells — so coverage counts
-            // DISTINCT vector ids (`__cid`, the stored id column),
-            // not rows; raw rows as the fallback for foreign layouts
-            val codesDf = spark.read.parquet(codeDirs: _*)
-            if (codesDf.schema.fieldNames.contains("__cid"))
-              codesDf.select("__cid").distinct().count()
-            else codesDf.count()
-          }
+          else spark.read.parquet(codeDirs: _*)
+            .select("__cid").distinct().count()
         math.max(0L, srcCnt - coded)
       }
       // the _generation nonce rewrites on every mutation — its mtime
-      // is the last-changed instant; centroids as the pre-nonce
-      // fallback
+      // is the last-changed instant
       val age = newestFileAge(Seq(s"$base/_generation"))
-        .orElse(newestFileAge(Seq(s"$base/ivf_centroids")))
       idxFrame("ann-index", incs.lastOption.getOrElse(0L),
         incs.size.toLong, missing, age)
     } else if (asMatview.isDefined) {
@@ -1353,9 +1346,6 @@ object StreamingOps {
         throw new java.io.FileNotFoundException(
           s"op log $logDir read empty mid-probe (compaction swap " +
             "window); retry")
-      if (!recs.exists(_.hasTxnCols))
-        throw new IllegalArgumentException(
-          s"$path is not a maintained replica (no TXN records)")
       val rows = recs.filter(r =>
         r.txnApp.exists(_.startsWith("graft_replicate:")) &&
           r.txnBatch.isDefined)

@@ -837,7 +837,7 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("generationToken is a safe probe: a mid-swap absent root reports " +
-      "AbsentToken without healing; a lost nonce probes as stable legacy") {
+      "AbsentToken without healing; a root without its nonce is refused") {
     import graft.storage.Fs
     val idx = Similarity.ivfPqFit(emb, "vec_id", "embedding",
       nCentroids = 8, ivfIterations = 1, trainSampleMod = 4,
@@ -859,13 +859,15 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
       "a read-probe must never move the writer's aside")
     Fs.renameChecked(spark, dir + "__old", dir) // writer completes
     assert(AnnIndex.generationToken(spark, dir) == t1)
-    // a root without the nonce file (pre-nonce layout) probes as a
-    // STABLE legacy token — never throws, never forces reload churn
+    // a root without the nonce file (an older build's index): load
+    // refuses it with the fix, and the probe never throws — it reports
+    // one-off transient tokens, which a stability check never reloads on
     Fs.deleteChecked(spark, s"$dir/_generation")
-    val legacy = AnnIndex.generationToken(spark, dir)
-    assert(legacy.startsWith("legacy|"))
-    assert(AnnIndex.generationToken(spark, dir) == legacy,
-      "the legacy token must repeat across probes")
+    val tok = AnnIndex.generationToken(spark, dir)
+    assert(tok.startsWith(AnnIndex.TransientTokenPrefix))
+    assert(AnnIndex.generationToken(spark, dir) != tok)
+    val e = intercept[IllegalStateException](AnnIndex.load(spark, dir))
+    assert(e.getMessage.contains("recreate"), e.getMessage)
   }
 
   test("IVF-PQ index save/load round-trip serves bit-identical results") {

@@ -135,6 +135,23 @@ class LogCompactSpec extends AnyFunSuite with SparkSpec {
     } finally spark.conf.unset(key)
   }
 
+  test("an op-log file in an older format (INT96 timestamps) is " +
+      "refused with the recreate fix, not mis-decoded") {
+    val path = mkSource("logc_int96")
+    val key = "spark.sql.parquet.outputTimestampType"
+    try {
+      spark.conf.set(key, "INT96")
+      GraftLog.history(spark, path).limit(1).coalesce(1)
+        .write.mode("append").parquet(GraftLog.logPath(path))
+    } finally spark.conf.unset(key)
+    val e = intercept[IllegalStateException] {
+      GraftLog.history(spark, path)
+    }
+    assert(e.getMessage.contains("older on-disk format") &&
+      e.getMessage.contains("recreate"),
+      s"the refusal must name the format and the fix: ${e.getMessage}")
+  }
+
   test("a non-managed path refuses") {
     val plain = tempDir("logc_plain") + "/p"
     Seq((1L, 1.0)).toDF("id", "v").write.parquet(plain)

@@ -273,7 +273,7 @@ class MatViewSpec extends AnyFunSuite with SparkSpec {
 
   test("swap-window race classification: missing-path crashes are " +
       "retryable through the cause chain, ordinary failures are not") {
-    import MatView.isSwapWindowRace
+    import Txn.isSwapWindowRace
     assert(isSwapWindowRace(new java.io.FileNotFoundException("/t/x")))
     assert(isSwapWindowRace(new RuntimeException("outer",
       new RuntimeException(
@@ -760,65 +760,27 @@ class MatViewSpec extends AnyFunSuite with SparkSpec {
     assertDfEqual(MatView.read(spark, view), recompute(src))
   }
 
-  test("layout back-compat: a bucket-outer (layout 1) tree keeps " +
-      "reading and folding incrementally through its own commit " +
-      "path; a rebuild upgrades it to the generation-outer layout") {
-    val src = mkSource("mv_layout1")
-    val view = tempDir("mv_layout1_v") + "/v"
+  test("an older on-disk format is refused with the recreate fix: a " +
+      "sidecar without `layout`, with layout 1, or with 0 buckets fails " +
+      "read and refresh loudly") {
+    val src = mkSource("mv_oldfmt")
+    val view = tempDir("mv_oldfmt_v") + "/v"
     MatView.create(spark, st, src, view, Seq("k"), "v")
-    val meta0 = MatView.loadMeta(spark, view)
-    assert(meta0.layout == 2, "new views must write generation-outer")
-    // rewrite the tree to the pre-round-16 bucket-outer shape: move
-    // every g<gen>/b<i> to b<i>/g<gen> with a per-dir birth stamp,
-    // and strip the sidecar's layout field (old sidecars never
-    // carried one)
-    val fs = new org.apache.hadoop.fs.Path(view)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    meta0.bucketGens.foreach { case (b, g) =>
-      val from = new org.apache.hadoop.fs.Path(f"$view/g$g%012d/b$b%05d")
-      val to = new org.apache.hadoop.fs.Path(f"$view/b$b%05d/g$g%012d")
-      fs.mkdirs(to.getParent)
-      assert(fs.rename(from, to))
-      Fs.touch(spark, to.toString + "/_graft_born_" +
-        System.currentTimeMillis())
-    }
-    meta0.bucketGens.values.toSet[Long].foreach { g =>
-      fs.delete(new org.apache.hadoop.fs.Path(f"$view/g$g%012d"), true)
-    }
     val sc = view + "/" + MatView.SidecarName
-    val stripped = Fs.readText(spark, sc)
-      .replaceAll(",\"layout\":\\d+", "")
-    assert(!stripped.contains("\"layout\":"))
-    Fs.writeText(spark, sc, stripped)
-    val meta1 = MatView.loadMeta(spark, view)
-    assert(meta1.layout == 1,
-      "a sidecar without the field must read as bucket-outer")
-    assertDfEqual(MatView.read(spark, view), recompute(src))
-    // a captured merge folds incrementally THROUGH the layout-1
-    // commit path, staying bucket-outer on disk
-    st.merge(Seq((2L, "a", 6.0)).toDF("id", "k", "v"), src,
-      "full.id = incremental.id", captureChanges = true)
-    assert(MatView.refresh(spark, st, view).mode == "incremental")
-    val meta2 = MatView.loadMeta(spark, view)
-    assert(meta2.layout == 1, "an incremental commit must not fork " +
-      "the tree's layout")
-    val moved = (meta2.bucketGens.toSet diff meta1.bucketGens.toSet)
-    assert(moved.nonEmpty)
-    moved.foreach { case (b, g) =>
-      assert(Fs.exists(spark, f"$view/b$b%05d/g$g%012d"),
-        "layout-1 commits must land bucket-outer")
-    }
-    assertDfEqual(MatView.read(spark, view), recompute(src))
-    // an UNCAPTURED mutation forces a rebuild — the whole-tree swap
-    // is the one moment the layout upgrades for free
-    Delete.where(spark, st, src, "id = 3", captureChanges = false)
-    assert(MatView.refresh(spark, st, view).mode == "rebuild")
-    val meta3 = MatView.loadMeta(spark, view)
-    assert(meta3.layout == 2, "a rebuild must upgrade to layout 2")
-    meta3.bucketGens.foreach { case (b, g) =>
-      assert(Fs.exists(spark, f"$view/g$g%012d/b$b%05d"))
-    }
-    assertDfEqual(MatView.read(spark, view), recompute(src))
+    val current = Fs.readText(spark, sc)
+    Seq(current.replaceAll(",\"layout\":\\d+", ""),
+      current.replaceAll("\"layout\":\\d+", "\"layout\":1"),
+      current.replaceAll("\"buckets\":\\d+", "\"buckets\":0"))
+      .foreach { older =>
+        assert(older != current, "the rewrite must change the sidecar")
+        Fs.writeText(spark, sc, older)
+        Seq[() => Any](() => MatView.read(spark, view),
+          () => MatView.refresh(spark, st, view)).foreach { call =>
+          val e = intercept[IllegalStateException](call())
+          assert(e.getMessage.contains("recreate"),
+            s"the refusal must name the fix: ${e.getMessage}")
+        }
+      }
   }
 
   test("local-delta fold: BinaryType keys match by content, not JVM " +
