@@ -112,8 +112,8 @@ case class MatViewRefresh(mode: String, batchesApplied: Long,
   * |changes|-sized, but a single-dir state would make the COMMIT
   * |state|-sized — a one-row delta against a 10⁹-key per-user rollup
   * would rewrite the whole state parquet, quietly dominating every
-  * refresh. The state is therefore hash-bucketed by key
-  * ([[StateBucketsKey]] buckets, fixed at create) into immutable
+  * refresh. The state is therefore hash-bucketed by key (the
+  * sidecar's `buckets`) into immutable
   * GENERATION dirs `g<gen>/b<bucket>` (generation-outer, so the
   * staged generation publishes with ONE atomic dir rename and one
   * birth stamp, see [[bucketDirName]]), resolved through a manifest in
@@ -121,7 +121,22 @@ case class MatViewRefresh(mode: String, batchesApplied: Long,
   * buckets its delta keys hash to (a key absent from the delta cannot
   * live elsewhere — same hash), stages their new generation, and
   * commits everything in the single atomic sidecar swap; untouched
-  * buckets are never opened, let alone rewritten. Superseded and
+  * buckets are never opened, let alone rewritten.
+  *
+  * The bucket count is set at create ([[StateBucketsKey]], default
+  * [[StateBucketsDefault]]) and kept by every commit that leaves some
+  * live bucket untouched, and by every rebuild. It changes in one place: an incremental refresh
+  * whose delta hashes into EVERY live bucket is a whole-state rewrite
+  * already, so bucketing saved it nothing but paid one small file per
+  * bucket. That commit restages the state at
+  * `ceil(stateBytes / spark.sql.files.openCostInBytes)` buckets,
+  * clamped to [1, [[StateBucketsDefault]]] — Spark's own estimate of
+  * what opening a file costs, against the replaced state's on-disk
+  * bytes from the fold read's file listing — and its manifest names
+  * only the staged buckets. A small view thus settles at one bucket
+  * (whose refreshes always cover it) and grows again as its state
+  * crosses multiples of the open cost. Setting [[StateBucketsKey]]
+  * pins the count for create and every refresh. Superseded and
   * crash-orphaned generations are unreferenced debris, swept past a
   * grace age ([[GenGraceKey]]) that doubles as the snapshot window
   * for lock-free readers whose file list was resolved through the
@@ -166,10 +181,14 @@ object MatView {
   val LockWaitKey = "spark.graft.matviewLockWaitMs"
   val LockWaitDefaultMs: Long = 10000L
 
-  /** How many hash buckets a NEW view's state is split into (>= 1).
-    * The refresh commit then rewrites only the buckets containing
+  /** Pins the hash-bucket count of a view's state (>= 1): a new view
+    * is created with it, and no refresh changes it. Unset, a view is
+    * created with [[StateBucketsDefault]] buckets and a refresh whose
+    * delta covers every live bucket restages the state at a
+    * size-derived count (see BUCKETED STATE in the object doc). A
+    * refresh commit rewrites only the buckets containing
     * changed/rescanned keys — |changes|-bucket-sized, never
-    * |state|-sized (see BUCKETED STATE in the object doc). */
+    * |state|-sized. */
   val StateBucketsKey = "spark.graft.matviewStateBuckets"
   val StateBucketsDefault: Int = 32
 
@@ -221,8 +240,9 @@ object MatView {
     * `minMax` selects the state shape (see the object doc).
     *
     * `buckets`/`stateGen`/`bucketGens` describe the BUCKETED state
-    * (see the object doc): `buckets` = hash-bucket count fixed at
-    * create, `stateGen` = monotone refresh counter, `bucketGens` = the
+    * (see the object doc): `buckets` = hash-bucket count (set at
+    * create, restaged only by a full-coverage refresh), `stateGen` =
+    * monotone refresh counter, `bucketGens` = the
     * live generation per non-empty bucket — the manifest readers
     * resolve state dirs through. */
   case class Meta(source: String, keys: Seq[String],
@@ -454,20 +474,23 @@ object MatView {
   private def bucketDirName(bucket: Int, gen: Long): String =
     genDirName(gen) + f"/b$bucket%05d"
 
+  private def stateSchema(m: Meta): org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+
   /** Zero-row state frame with the sidecar's recorded schema — the
     * all-groups-deleted (or brand-new-bucket) lifeline. */
-  private def emptyState(spark: SparkSession, m: Meta): DataFrame = {
-    val schema = org.apache.spark.sql.types.DataType
-      .fromJson(m.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+  private def emptyState(spark: SparkSession, m: Meta): DataFrame =
     spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-  }
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      stateSchema(m))
 
   /** The live state, resolved through the manifest — optionally only
     * the `affected` buckets: the refresh fold reads exactly the
     * buckets its delta keys hash to, because a key absent from the
-    * delta cannot live in any other bucket (same hash). */
+    * delta cannot live in any other bucket (same hash). Read with the
+    * sidecar's recorded schema, so no Spark job infers it from a
+    * footer. */
   private def readState(spark: SparkSession, base: String, m: Meta,
                         affected: Option[Set[Int]] = None): DataFrame = {
     val dirs = m.bucketGens.toSeq
@@ -475,7 +498,29 @@ object MatView {
       .sortBy(_._1)
       .map { case (b, g) => s"$base/${bucketDirName(b, g)}" }
     if (dirs.isEmpty) emptyState(spark, m)
-    else spark.read.parquet(dirs: _*)
+    else spark.read.schema(stateSchema(m)).parquet(dirs: _*)
+  }
+
+  /** On-disk bytes of the files a [[readState]] frame scans — from the
+    * file listing the read already made on the driver, so no job and
+    * no extra listing. 0 for the empty lifeline. */
+  private def listedBytes(state: DataFrame): Long =
+    state.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        l.relation
+    }.collect {
+      case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+        r.location.sizeInBytes
+    }.sum
+
+  /** The size-derived bucket count a full-coverage refresh restages
+    * at (see BUCKETED STATE): one bucket per
+    * `spark.sql.files.openCostInBytes` of state, in
+    * [1, [[StateBucketsDefault]]]. */
+  private def sizedBuckets(spark: SparkSession, stateBytes: Long): Int = {
+    val openCost = math.max(1L, spark.sessionState.conf.filesOpenCostInBytes)
+    math.min(StateBucketsDefault.toLong,
+      math.max(1L, (stateBytes + openCost - 1) / openCost)).toInt
   }
 
   /** Write `state` hash-bucketed under `intoDir` as generation `gen`
@@ -747,7 +792,7 @@ object MatView {
         // never runs), so the lock debris itself is part of the
         // crash signature — requiring isEmpty would misreport that
         // (most common) crash shape as "noop" until vacuum fenced it.
-        if (batchStampsOnly(spark, source).exists(_ > meta.lastBatch) &&
+        if (batchStamps(spark, source).exists(_ > meta.lastBatch) &&
             !Txn.heldBy(spark, source)
               .exists(_._2 <= Txn.lockTimeoutMs(spark))) {
           if (Txn.snapshot(spark, source) != snap)
@@ -765,7 +810,10 @@ object MatView {
           .iterator
           .drop(meta.logEntries.toInt).map(_.operation).toSeq
         val stamps = batchStamps(spark, source)
-        val inRange = stamps.filter(_._1 > meta.lastBatch)
+        // commit markers are probed only above the watermark: the
+        // batches at or below it are folded and never classify
+        val inRange = stamps.filter(_ > meta.lastBatch)
+          .map(b => (b, Merge.isBatchCommitted(spark, source, b)))
         val committed = inRange.filter(_._2).map(_._1).sorted
         val uncommittedInRange = inRange.exists(!_._2)
         val explainable =
@@ -793,25 +841,18 @@ object MatView {
   // ----------------------------------------------------- inner phases
 
   /** Stamps of every change-batch dir currently on disk — ONE
-    * directory listing, no per-batch marker probes. The noop path's
-    * crash probe needs only existence; paying a marker `exists` per
-    * batch there would turn every quiet poll tick into N filesystem
-    * RPCs on a long-lived feed. */
-  private def batchStampsOnly(spark: SparkSession,
-                              source: String): Seq[Long] = {
+    * directory listing, no marker probes. Callers probe commit markers
+    * only for the stamps they classify (above the watermark, or down
+    * to the newest committed one): a marker `exists` per retained
+    * batch would turn every refresh into N filesystem RPCs on a
+    * long-lived feed. */
+  private def batchStamps(spark: SparkSession,
+                          source: String): Seq[Long] = {
     val feedDir = source.stripSuffix("/") + "/" + Merge.ChangesDirName
     Fs.listSubdirs(spark, feedDir)
       .filter(_.startsWith("batch="))
       .map(_.stripPrefix("batch=").toLong)
   }
-
-  /** (stamp, committed?) of every change-batch dir currently on disk —
-    * driver metadata listing plus one marker probe per batch, never a
-    * data read. */
-  private def batchStamps(spark: SparkSession,
-                          source: String): Seq[(Long, Boolean)] =
-    batchStampsOnly(spark, source)
-      .map(b => (b, Merge.isBatchCommitted(spark, source, b)))
 
   /** Re-resolve the view's recorded columns through the source's
     * CURRENT schema before a rebuild: a mapped RENAME moved the
@@ -868,7 +909,7 @@ object MatView {
   private def rebuildOnce(spark: SparkSession, storage: BasicStorage,
                           viewBase: String, meta0: Meta,
                           snap0: Option[OpLogSnapshot] = None,
-                          stamps0: Option[Seq[(Long, Boolean)]] = None)
+                          stamps0: Option[Seq[Long]] = None)
       : MatViewRefresh = {
     val snap = snap0.getOrElse(Txn.snapshot(spark, meta0.source))
     val meta = resolveColumns(spark, storage, viewBase, meta0)
@@ -878,11 +919,13 @@ object MatView {
     // assert below). Uncommitted stamps are excluded: a live capture's
     // merge will commit with its op-log row and be applied by the next
     // refresh; crashed debris never commits and is vacuum's to fence.
-    // refresh() passes its already-probed stamps — the marker probes
-    // cost one RPC per retained batch and need not run twice.
+    // The watermark is the newest committed stamp, so the marker
+    // probes run from the newest stamp down and stop at the first
+    // committed one. refresh() passes its already-listed stamps.
     val watermark = stamps0.getOrElse(batchStamps(spark, meta.source))
-      .collect { case (b, true) => b }
-      .maxOption.getOrElse(Long.MinValue)
+      .sorted(Ordering[Long].reverse)
+      .find(Merge.isBatchCommitted(spark, meta.source, _))
+      .getOrElse(Long.MinValue)
     // the aggregation is materialized ONCE (state-sized), so the
     // null-key probe and the state write share a single source scan —
     // a rebuild costs exactly one pass over the fact table
@@ -903,10 +946,14 @@ object MatView {
                                committed: Seq[Long]): MatViewRefresh = {
     val source = meta.source
     val keys = meta.keys
-    // the batch partition column prunes the feed read to the new dirs
-    val feed = Merge.changeFeed(spark, source)
-      .filter(col("batch") > meta.lastBatch &&
-        col("batch") <= committed.max)
+    // only the new batch dirs are listed and footer-read (`committed`
+    // is above the watermark by construction); basePath keeps `batch`
+    // a discovered partition column, and mergeSchema is
+    // [[Merge.changeFeed]]'s: new batches may straddle an evolution
+    val feedDir = s"${source.stripSuffix("/")}/${Merge.ChangesDirName}"
+    val batchDirs = committed.map(b => s"$feedDir/batch=$b")
+    val feed = spark.read.option("mergeSchema", "true")
+      .option("basePath", feedDir).parquet(batchDirs: _*)
     val sign = when(col("_change_type")
       .isin("insert", "update_postimage"), 1L).otherwise(-1L)
     // per value column: dnncnt/dsum count and add by the DECIMAL-CAST
@@ -955,11 +1002,7 @@ object MatView {
     // blocks — the delta may be large, and |delta| rows never belong
     // on the driver.
     val newBatchBytes: Long =
-      committed.filter(_ > meta.lastBatch).map { b =>
-        Fs.dataFiles(spark,
-          s"${source.stripSuffix("/")}/${Merge.ChangesDirName}/batch=$b")
-          .map(_._2).sum
-      }.sum
+      batchDirs.map(Fs.dataFiles(spark, _).map(_._2).sum).sum
     val localDelta = newBatchBytes <=
       spark.conf.getOption(LocalDeltaBytesKey).map(_.toLong)
         .getOrElse(LocalDeltaBytesDefault)
@@ -985,6 +1028,16 @@ object MatView {
         (d, aff, None)
       }
     val stateSide = readState(spark, viewBase, meta, Some(affected))
+    // a delta that hashes into every live bucket rewrites the whole
+    // state anyway: unless the count is pinned, restage it at the
+    // size-derived count, under a manifest of only the staged buckets
+    // (BUCKETED STATE in the object doc)
+    val restage = spark.conf.getOption(StateBucketsKey).isEmpty &&
+      meta.bucketGens.keySet.subsetOf(affected)
+    val stageMeta =
+      if (!restage) meta
+      else meta.copy(buckets = sizedBuckets(spark, listedBytes(stateSide)),
+        bucketGens = Map.empty)
     val s = stateSide.withColumn("_s", lit(true))
     val d = deltas.withColumn("_d", lit(true))
 
@@ -1174,10 +1227,11 @@ object MatView {
         folded.select(stateCols(meta).map(col): _*)
           .unionByName(rescanned.select(stateCols(meta).map(col): _*))
       }
-    val newMeta = meta.copy(lastBatch = committed.max,
+    val newMeta = stageMeta.copy(lastBatch = committed.max,
       logEntries = snap.entries, logMaxSeq = snap.maxSeq,
       schemaJson = newState.schema.json)
-    commitIncremental(spark, viewBase, newState, newMeta, snap, affected)
+    commitIncremental(spark, viewBase, newState, newMeta, snap,
+      if (restage) (0 until newMeta.buckets).toSet else affected)
     MatViewRefresh("incremental", committed.size.toLong, nRescan)
   }
 
@@ -1258,7 +1312,12 @@ object MatView {
     * leaf swaps FORWARD while the sidecar still holds the old
     * watermark, so a crash mid-commit would make the next refresh
     * fold the same delta batches into the already-folded buckets —
-    * silent double-counting.) */
+    * silent double-counting.)
+    *
+    * `affected` is the set the staged buckets must fall in: the
+    * delta's hash set, or on a restage (a full-coverage refresh, whose
+    * `newMeta` carries the new count and an empty manifest) every
+    * bucket of the new count. */
   private def commitIncremental(spark: SparkSession, viewBase: String,
                                 state: DataFrame, newMeta: Meta,
                                 snap: OpLogSnapshot,
@@ -1269,9 +1328,9 @@ object MatView {
     Fs.deleteChecked(spark, stage)
     try {
       val ids = stageBuckets(spark, state, newMeta, stage, gen)
-      // a staged bucket outside the delta's hash set would corrupt
-      // the manifest silently — impossible unless the bucket function
-      // forked between the listing and the staging write; refuse loud
+      // a staged bucket outside `affected` would corrupt the manifest
+      // silently — impossible unless the bucket function forked
+      // between the listing and the staging write; refuse loud
       val rogue = ids.filterNot(affected)
       if (rogue.nonEmpty)
         throw new IllegalStateException(

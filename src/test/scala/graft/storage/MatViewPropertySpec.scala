@@ -42,12 +42,24 @@ class MatViewPropertySpec extends AnyFunSuite with SparkSpec {
   private def recompute(path: String) =
     MatViewTestSupport.recompute(spark, st, path)
 
+  /** Even seeds pin the state at 32 buckets, so the partial-bucket
+    * commit stays covered: unpinned, the first refresh whose delta
+    * covers every live bucket restages these 4-key views at one
+    * bucket, whose every later commit is a whole-state rewrite. Odd
+    * seeds run unpinned and cover the restage. */
+  private def bucketsFor[T](seed: Int)(body: => T): T =
+    if (seed % 2 == 1) body
+    else {
+      spark.conf.set(MatView.StateBucketsKey, "32")
+      try body finally spark.conf.unset(MatView.StateBucketsKey)
+    }
+
   test("random mutation interleavings: after every refresh the view " +
       "equals a recompute of the current table") {
     // soak knob: GRAFT_MV_PROP_SEEDS=25 for an extended local run
     val nSeeds = sys.env.get("GRAFT_MV_PROP_SEEDS")
       .map(_.toInt).getOrElse(5)
-    for (seed <- 0 until nSeeds) {
+    for (seed <- 0 until nSeeds) bucketsFor(seed) {
       val rng = new scala.util.Random(70 + seed)
       val root = tempDir(s"mv_prop_$seed")
       val (path, view) = (root + "/t", root + "/v")
@@ -192,7 +204,7 @@ class MatViewPropertySpec extends AnyFunSuite with SparkSpec {
         "refresh the view equals a recompute") {
       val nSeeds = sys.env.get("GRAFT_MV_PROP_SEEDS")
         .map(_.toInt).getOrElse(3)
-      for (seed <- 0 until nSeeds) {
+      for (seed <- 0 until nSeeds) bucketsFor(seed) {
         val rng = new scala.util.Random(700 + seed)
         val root = tempDir(s"mv_prop2_${withMinMax}_$seed")
         val (path, view) = (root + "/t", root + "/v")

@@ -760,6 +760,119 @@ class MatViewSpec extends AnyFunSuite with SparkSpec {
     assertDfEqual(MatView.read(spark, view), recompute(src))
   }
 
+  /** A captured merge updating one row of every seed group (a, b, c,
+    * d) — a delta that hashes into every live bucket. */
+  private def mergeEveryGroup(src: String, v: Double): Unit =
+    st.merge(Seq((1L, "a", v), (4L, "b", v), (6L, "c", v), (8L, "d", v))
+      .toDF("id", "k", "v"), src, "full.id = incremental.id",
+      captureChanges = true)
+
+  test("bucketed state: a refresh whose delta covers every live bucket " +
+      "restages a small view at ONE bucket with a one-entry manifest") {
+    val src = mkSource("mv_restage")
+    val view = tempDir("mv_restage_v") + "/v"
+    MatView.create(spark, st, src, view, Seq("k"), "v")
+    val meta0 = MatView.loadMeta(spark, view)
+    assert(meta0.buckets == MatView.StateBucketsDefault)
+    assert(meta0.bucketGens.size > 1,
+      "seed groups must spread over more than one bucket")
+    mergeEveryGroup(src, 4.0)
+    val r = MatView.refresh(spark, st, view)
+    assert(r.mode == "incremental", s"took ${r.mode}")
+    val meta1 = MatView.loadMeta(spark, view)
+    assert(meta1.buckets == 1, s"a KB-sized state restages at one " +
+      s"bucket, got ${meta1.buckets}")
+    assert(meta1.bucketGens == Map(0 -> meta1.stateGen),
+      s"the manifest names only the staged bucket: ${meta1.bucketGens}")
+    assertDfEqual(MatView.read(spark, view), recompute(src))
+    // a one-bucket view's refreshes always cover it and stay at one
+    st.merge(Seq((2L, "a", 6.0)).toDF("id", "k", "v"), src,
+      "full.id = incremental.id", captureChanges = true)
+    assert(MatView.refresh(spark, st, view).mode == "incremental")
+    assert(MatView.loadMeta(spark, view).buckets == 1)
+    assertDfEqual(MatView.read(spark, view), recompute(src))
+  }
+
+  test("bucketed state: the restaged count follows the state's bytes " +
+      "over spark.sql.files.openCostInBytes, and a later sparse delta " +
+      "rewrites only its bucket") {
+    val src = mkSource("mv_regrow")
+    val view = tempDir("mv_regrow_v") + "/v"
+    MatView.create(spark, st, src, view, Seq("k"), "v")
+    mergeEveryGroup(src, 4.0)
+    assert(MatView.refresh(spark, st, view).mode == "incremental")
+    assert(MatView.loadMeta(spark, view).buckets == 1)
+    spark.conf.set("spark.sql.files.openCostInBytes", "1024")
+    try {
+      // a KB-sized state spans several 1 KB open costs
+      mergeEveryGroup(src, 7.0)
+      assert(MatView.refresh(spark, st, view).mode == "incremental")
+      val meta1 = MatView.loadMeta(spark, view)
+      assert(meta1.buckets > 1, s"the count must grow: ${meta1.buckets}")
+      assert(meta1.bucketGens.keySet.forall(_ < meta1.buckets))
+      assert(meta1.bucketGens.size > 1,
+        s"seed groups must spread over the grown buckets: " +
+          meta1.bucketGens)
+      assertDfEqual(MatView.read(spark, view), recompute(src))
+      // one key touches one bucket of several: today's partial path
+      st.merge(Seq((2L, "a", 6.0)).toDF("id", "k", "v"), src,
+        "full.id = incremental.id", captureChanges = true)
+      assert(MatView.refresh(spark, st, view).mode == "incremental")
+      val meta2 = MatView.loadMeta(spark, view)
+      assert(meta2.buckets == meta1.buckets)
+      val moved = meta2.bucketGens.toSet diff meta1.bucketGens.toSet
+      assert(moved.size == 1, s"expected 1 bucket rewritten, got $moved")
+      assert(meta2.bucketGens.keySet == meta1.bucketGens.keySet)
+      assertDfEqual(MatView.read(spark, view), recompute(src))
+    } finally spark.conf.unset("spark.sql.files.openCostInBytes")
+  }
+
+  test("bucketed state: a set spark.graft.matviewStateBuckets pins the " +
+      "count through full-coverage refreshes") {
+    val src = mkSource("mv_pinned")
+    val view = tempDir("mv_pinned_v") + "/v"
+    spark.conf.set(MatView.StateBucketsKey, "8")
+    try {
+      MatView.create(spark, st, src, view, Seq("k"), "v")
+      val meta0 = MatView.loadMeta(spark, view)
+      assert(meta0.buckets == 8)
+      for (v <- Seq(4.0, 7.0)) {
+        mergeEveryGroup(src, v)
+        assert(MatView.refresh(spark, st, view).mode == "incremental")
+        val m = MatView.loadMeta(spark, view)
+        assert(m.buckets == 8, s"a pinned count never changes: ${m.buckets}")
+        assert(m.bucketGens.keySet == meta0.bucketGens.keySet)
+        assertDfEqual(MatView.read(spark, view), recompute(src))
+      }
+    } finally spark.conf.unset(MatView.StateBucketsKey)
+  }
+
+  test("an incremental refresh reads only the batches above its " +
+      "watermark: an already-folded batch overwritten with garbage " +
+      "bytes is never opened") {
+    val src = mkSource("mv_folded_garbage")
+    val view = tempDir("mv_folded_garbage_v") + "/v"
+    MatView.create(spark, st, src, view, Seq("k"), "v")
+    st.merge(Seq((2L, "a", 6.0)).toDF("id", "k", "v"), src,
+      "full.id = incremental.id", captureChanges = true)
+    assert(MatView.refresh(spark, st, view).mode == "incremental")
+    val folded = MatView.loadMeta(spark, view).lastBatch
+    val batchDir = s"$src/${Merge.ChangesDirName}/batch=$folded"
+    val parts = Fs.dataFiles(spark, batchDir).map(_._1)
+    assert(parts.nonEmpty)
+    val fs = new org.apache.hadoop.fs.Path(src)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    parts.foreach { p =>
+      val out = fs.create(new org.apache.hadoop.fs.Path(p), true)
+      try out.write("not a parquet file".getBytes("UTF-8"))
+      finally out.close()
+    }
+    Delete.where(spark, st, src, "id = 8", captureChanges = true)
+    val r = MatView.refresh(spark, st, view)
+    assert(r.mode == "incremental" && r.batchesApplied == 1L, s"took $r")
+    assertDfEqual(MatView.read(spark, view), recompute(src))
+  }
+
   test("an older on-disk format is refused with the recreate fix: a " +
       "sidecar without `layout`, with layout 1, or with 0 buckets fails " +
       "read and refresh loudly") {
