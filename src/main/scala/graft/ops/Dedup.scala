@@ -339,13 +339,17 @@ object Dedup {
     // referenced many times, so CollapseProject leaves it alone.
     val tokens = split(TextAnalysis.normalize(col(textCol)), " ")
     val toks = col("__graft_tokens")
-    val hashArr = when(size(toks) >= n,
-      transform(sequence(lit(0), size(toks) - n),
-        i => xxhash64((0 until n).map(j => element_at(toks, i + j + 1)): _*)))
+    val hashArr = when(size(toks) >= n, gramHashes(toks, n))
       .otherwise(array(xxhash64(toks)))
     df.select(col(idCol), tokens.as("__graft_tokens"))
       .select(col(idCol), hashArr.as("shingle_hashes"))
   }
+
+  /** xxhash64 of every `n`-token window of the array column `toks`
+    * (size(toks) >= n), over the n tokens in place. */
+  private def gramHashes(toks: Column, n: Int): Column =
+    transform(sequence(lit(0), size(toks) - n),
+      i => xxhash64((0 until n).map(j => element_at(toks, i + j + 1)): _*))
 
   /** One row per (id, shingle-hash) — [[shingleHashArrays]] exploded.
     * Callers that scan the result more than once should checkpoint the
@@ -384,11 +388,13 @@ object Dedup {
     * numHashes/bands rows, hash each band to a bucket. Pairs sharing any
     * band bucket are candidates; candidates are verified with exact
     * shingle-set Jaccard. Returns (id_a, id_b, jaccard) with
-    * jaccard >= threshold, id_a < id_b.
+    * jaccard >= threshold, id_a < id_b; `idCol` is a unique document
+    * key (one row per id).
     *
     * Scale: the candidate join is per-(band, bucket) — skew-bounded by
-    * bucket size, never all-pairs. Signature and shingle frames are
-    * reused (cached by the caller if iterating).
+    * bucket size, never all-pairs. The verify reads the checkpointed
+    * shingle ARRAYS (see [[jaccardFromArrays]]): two joins of the
+    * candidates against one row per id, no exploded shingle rows.
     */
   def minHashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       numHashes: Int = 64, bands: Int = 16,
@@ -396,19 +402,19 @@ object Dedup {
                       jaccardThreshold: Double = 0.5): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rows = numHashes / bands
-    // The shingle ARRAY frame feeds four downstream scans (signatures,
-    // both sides of the intersection join, set sizes); checkpointing it
-    // materializes the tokenize ONCE instead of four times, and — the
-    // part that matters most — acts as a pushdown barrier so the
-    // explode's inferred size(...)>0 filter runs against materialized
-    // arrays instead of re-inlining the tokenizer into the lambda (see
+    // The shingle ARRAY frame feeds three downstream scans (signatures
+    // and both sides of the verify join); checkpointing it materializes
+    // the tokenize ONCE instead of three times, and — the part that
+    // matters most — acts as a pushdown barrier so the explode's
+    // inferred size(...)>0 filter runs against materialized arrays
+    // instead of re-inlining the tokenizer into the lambda (see
     // [[shingleHashes]]). localCheckpoint, not persist, so lineage is
     // truncated and the blocks are reclaimed with the RDD (no unpersist
     // bookkeeping for callers holding the lazy result).
-    val sh = explodeShingles(
-      shingleHashArrays(df, idCol, textCol, shingleSize).localCheckpoint(true),
-      idCol)
-    val sigs = signaturesFromShingles(sh, idCol, numHashes)
+    val arrays =
+      shingleHashArrays(df, idCol, textCol, shingleSize).localCheckpoint(true)
+    val sigs = signaturesFromShingles(explodeShingles(arrays, idCol), idCol,
+      numHashes)
     val banded = bandedBuckets(sigs, idCol, bands, rows)
     val left = banded.alias("a")
     val right = banded.alias("b")
@@ -418,7 +424,7 @@ object Dedup {
         col(s"a.$idCol") < col(s"b.$idCol"))
       .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
       .distinct()
-    jaccardFromShingles(candidates, sh, idCol)
+    jaccardFromArrays(candidates, arrays, idCol)
       .filter(col("jaccard") >= jaccardThreshold)
   }
 
@@ -734,29 +740,47 @@ object Dedup {
   }
 
   /** Exact shingle-set Jaccard for candidate pairs (the verify stage of
-    * LSH). Join-based: |A ∩ B| via shingle-hash join, sizes via per-id
-    * counts. */
+    * LSH), over [[shingleHashArrays]] of `df` — see
+    * [[jaccardFromArrays]]. */
   def verifiedJaccard(pairs: DataFrame, df: DataFrame, idCol: String,
                       textCol: String, shingleSize: Int): DataFrame =
-    jaccardFromShingles(pairs, explodeShingles(
+    jaccardFromArrays(pairs,
       shingleHashArrays(df, idCol, textCol, shingleSize).localCheckpoint(true),
-      idCol), idCol)
+      idCol)
 
-  private def jaccardFromShingles(pairs: DataFrame, shRaw: DataFrame,
-                                  idCol: String): DataFrame =
-    jaccardBipartite(pairs, shRaw, shRaw, idCol)
+  /** Exact Jaccard for (id_a, id_b) pairs from one shingle-hash array
+    * per id (`arrays`: idCol, shingle_hashes; ids unique): |A ∩ B| is
+    * `size(array_intersect)` of the distinct sets, so nothing is
+    * exploded. Pairs sharing no shingle are dropped at any threshold;
+    * long sizes keep each jaccard bit-equal to [[jaccardBipartite]]'s. */
+  private def jaccardFromArrays(pairs: DataFrame, arrays: DataFrame,
+                                idCol: String): DataFrame = {
+    val sets = arrays.select(col(idCol),
+      array_distinct(col("shingle_hashes")).as("__s"))
+    val common = col("common")
+    pairs
+      .join(sets.select(col(idCol).as("id_a"), col("__s").as("__sa")), "id_a")
+      .join(sets.select(col(idCol).as("id_b"), col("__s").as("__sb")), "id_b")
+      .withColumn("common",
+        size(array_intersect(col("__sa"), col("__sb"))).cast("long"))
+      .filter(common > 0)
+      .withColumn("jaccard", common.cast("double") /
+        (size(col("__sa")).cast("long") + size(col("__sb")).cast("long") -
+          common))
+      .select("id_a", "id_b", "jaccard")
+  }
 
-  /** Exact Jaccard for (id_a, id_b) pairs where a-ids index `shARaw`
-    * and b-ids index `shBRaw` (the same frame for self-join callers —
-    * detected by reference so the distinct/size aggregates run once,
-    * not twice, over the corpus shingle frame). */
+  /** Exact Jaccard for (id_a, id_b) pairs where a-ids index the
+    * exploded (id, shingle_hash) rows `shARaw` and b-ids index `shBRaw`
+    * — the bipartite near-dup paths, whose persisted index stores its
+    * base side exploded. Join-based: |A ∩ B| via a shingle-hash join,
+    * sizes via per-id counts. */
   private def jaccardBipartite(pairs: DataFrame, shARaw: DataFrame,
                                shBRaw: DataFrame, idCol: String): DataFrame = {
     val a = shARaw.distinct() // set semantics for Jaccard
-    val b = if (shBRaw eq shARaw) a else shBRaw.distinct()
+    val b = shBRaw.distinct()
     val sizesA = a.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
-    val sizesB = if (b eq a) sizesA
-      else b.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
+    val sizesB = b.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
     val shA = a.select(col(idCol).as("id_a"), col("shingle_hash"))
     val shB = b.select(col(idCol).as("id_b"), col("shingle_hash"))
     val inter = pairs.join(shA, "id_a").join(shB, Seq("id_b", "shingle_hash"))
@@ -986,22 +1010,28 @@ object Dedup {
     * Scale shape: ONE gram-keyed shuffle — the corpus-wide occurrence
     * count rides an unordered window partitioned by the gram key (no
     * separate count-then-join-back pass), then a per-doc partial
-    * aggregate. Grams key by xxhash64, so the wide gram strings never
-    * cross the shuffle — a 64-bit collision (P ≈ n²/2⁶⁵) could
-    * overcount one span; acceptable for a filter signal, and the only
-    * concession the single-shuffle shape asks. */
+    * aggregate. Grams key by xxhash64 over their n tokens, hashed in
+    * place (no gram strings are built), so the wide grams never cross
+    * the shuffle — a 64-bit collision (P ≈ n²/2⁶⁵) could overcount one
+    * span; acceptable for a filter signal, and the only concession the
+    * single-shuffle shape asks.
+    *
+    * Alias rule: the tokens are projected as a column before the gram
+    * lambda references them — Catalyst inlines an unaliased `split` into
+    * every gram, O(tokens²) per document — and explode_outer + isNotNull
+    * stands in for explode, whose inferred size(...)>0 filter would
+    * re-inline it (as in [[shingleHashArrays]] and [[tokenChunks]]). */
   def duplicateSpans(df: DataFrame, idCol: String, textCol: String,
                      n: Int = 13, minCount: Int = 2): DataFrame = {
     require(n >= 2, s"span length must be >= 2, got $n")
     require(minCount >= 2, s"minCount must be >= 2, got $minCount")
-    val tokArr = split(trim(lower(col(textCol))), "\\s+")
-    val gramArr = when(size(tokArr) >= n,
-        transform(sequence(lit(0), size(tokArr) - n),
-          i => concat_ws(" ", slice(tokArr, i + 1, lit(n)))))
-      .otherwise(array().cast("array<string>"))
+    val toks = col("__graft_tokens")
     val grams = df
-      .select(col(idCol).as("__id"), explode(gramArr).as("__gram"))
-      .select(col("__id"), xxhash64(col("__gram")).as("__g"))
+      .select(col(idCol).as("__id"),
+        split(trim(lower(col(textCol))), "\\s+").as("__graft_tokens"))
+      .select(col("__id"),
+        explode_outer(when(size(toks) >= n, gramHashes(toks, n))).as("__g"))
+      .filter(col("__g").isNotNull)
     val counted = grams.withColumn("__total",
       count(lit(1)).over(Window.partitionBy(col("__g"))))
     counted

@@ -155,4 +155,52 @@ class DedupPropertySpec extends AnyFunSuite with SparkSpec {
     assert(got == expected)
     assert(!got.exists(_._1 == 4L), "sub-n docs must not appear")
   }
+
+  test("property: minHashLshPairs and verifiedJaccard equal the driver-side shingle-set Jaccard") {
+    for (seed <- 0 until 3) {
+      val rng = new scala.util.Random(100 + seed)
+      // random docs plus one-word edits of some of them, so LSH finds
+      // candidates across the whole Jaccard range
+      val base = (0L until 16L).map(i => (i, randText(rng)))
+      val edits = base.take(8).map { case (i, t) =>
+        val ws = t.split(" ")
+        ws(rng.nextInt(ws.length)) = words(rng.nextInt(words.size))
+        (i + 100L, ws.mkString(" "))
+      }
+      val df = (base ++ edits).toDF("doc_id", "text")
+      val sets = Dedup.shingleHashArrays(df, "doc_id", "text", 3)
+        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
+      def common(a: Long, b: Long): Int = sets(a).intersect(sets(b)).size
+      def model(a: Long, b: Long): Double = {
+        val c = common(a, b)
+        c.toDouble / (sets(a).size + sets(b).size - c).toDouble
+      }
+      def pairsOf(t: Double): Map[(Long, Long), Double] =
+        Dedup.minHashLshPairs(df, "doc_id", "text", numHashes = 16,
+            bands = 8, jaccardThreshold = t)
+          .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
+          .toMap
+      val all = pairsOf(0.0)
+      assert(all.nonEmpty, s"seed=$seed")
+      all.foreach { case ((a, b), j) =>
+        assert(a < b, s"seed=$seed pair=($a,$b)")
+        assert(common(a, b) > 0,
+          s"seed=$seed pair=($a,$b) shares no shingle")
+        assert(j == model(a, b), s"seed=$seed pair=($a,$b)")
+      }
+      assert(pairsOf(0.5) == all.filter(_._2 >= 0.5), s"seed=$seed")
+      // every pair, disjoint ones included: the verify keeps exactly the
+      // pairs that share a shingle, with the exact set Jaccard
+      val ids = sets.keys.toSeq.sorted
+      val every = for (a <- ids; b <- ids if a < b) yield (a, b)
+      val verified = Dedup.verifiedJaccard(every.toDF("id_a", "id_b"), df,
+          "doc_id", "text", 3)
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
+        .toMap
+      val expected = every.filter { case (a, b) => common(a, b) > 0 }
+        .map { case (a, b) => (a, b) -> model(a, b) }.toMap
+      assert(expected.size < every.size, s"seed=$seed: no disjoint pair")
+      assert(verified == expected, s"seed=$seed")
+    }
+  }
 }

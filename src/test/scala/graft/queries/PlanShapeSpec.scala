@@ -631,4 +631,24 @@ class PlanShapeSpec extends AnyFunSuite with SparkSpec {
     assert(!p.contains("minhash") && !p.contains("posexplode"),
       s"final plan re-derives upstream curation stages:\n$p")
   }
+
+  test("duplicateSpans tokenizes once: no StringSplit inside its Generate or inferred Filter") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, StringSplit}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate}
+    // a parquet source, not a local Seq: ConvertToLocalRelation would
+    // fold the token projection away and hide any inlining
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val plan = graft.ops.Dedup.duplicateSpans(docs, "doc_id", "text", n = 4)
+      .queryExecution.optimizedPlan
+    def splits(e: Expression): Int = e.collect { case s: StringSplit => s }.size
+    val generators = plan.collect { case g: Generate => g.generator }
+    assert(generators.nonEmpty, s"no Generate in the span plan:\n$plan")
+    val inGenerate = generators.map(splits).sum
+    val inFilter = plan.collect { case f: Filter => splits(f.condition) }.sum
+    assert(inGenerate == 0 && inFilter == 0,
+      s"tokenizer inlined into the gram generator ($inGenerate) or " +
+        s"filter ($inFilter):\n$plan")
+    assert(plan.flatMap(_.expressions).map(splits).sum == 1,
+      s"each document must be split exactly once:\n$plan")
+  }
 }

@@ -19,7 +19,7 @@ Driver-strictness hardening (round 8):
   crash driver-side, so it is reported as a loud defect here instead of
   silently passing — r07's q_pca_project class.
 """
-import sys, os, json, glob
+import sys, os, json, glob, shutil
 
 import duckdb
 import numpy as np
@@ -51,8 +51,29 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
     return df.reset_index(drop=True)
 
 
+# DuckDB's spill directory, under the Verify output dir; the leading dot
+# keeps it out of the query-name listing below
+SPILL_DIR = ".duckdb_spill"
+
+
+def memory_limit() -> str:
+    """A quarter of physical RAM: a big oracle spills to SPILL_DIR, or
+    fails fast, instead of running the host out of memory."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, ram // 4 // 2**20)}MB"
+
+
 def main(sf_dir: str, out_dir: str) -> int:
-    con = duckdb.connect()
+    spill = os.path.join(out_dir, SPILL_DIR)
+    try:
+        return compare(sf_dir, out_dir, spill)
+    finally:
+        shutil.rmtree(spill, ignore_errors=True)
+
+
+def compare(sf_dir: str, out_dir: str, spill: str) -> int:
+    con = duckdb.connect(config={
+        "memory_limit": memory_limit(), "temp_directory": spill})
     for p in glob.glob(os.path.join(sf_dir, "*.parquet")):
         name = os.path.basename(p)[: -len(".parquet")]
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
@@ -61,7 +82,7 @@ def main(sf_dir: str, out_dir: str) -> int:
     n_bad = 0
     names = sorted(
         d for d in os.listdir(out_dir)
-        if os.path.isdir(os.path.join(out_dir, d)))
+        if d != SPILL_DIR and os.path.isdir(os.path.join(out_dir, d)))
     for name in names:
         files = glob.glob(os.path.join(out_dir, name, "*.parquet"))
         raw = pd.concat([pd.read_parquet(f) for f in files])
