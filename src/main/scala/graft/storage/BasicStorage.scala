@@ -18,6 +18,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 class BasicStorage(spark: SparkSession) extends Storage {
 
+  NioLocalFileSystem.install(spark)
+
   private val observers = ListBuffer.empty[StorageOutputObserver]
 
   private val formats = Set("delta", "parquet", "json", "csv", "orc")

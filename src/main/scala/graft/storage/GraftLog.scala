@@ -2,7 +2,7 @@ package graft.storage
 
 import java.sql.Timestamp
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -668,14 +668,22 @@ object GraftLog {
 /** Thin Hadoop FileSystem helpers (the JVM-native version of the
   * reference's py4j calls, jorvik/storage/basic.py:236-243). */
 object Fs {
+  /** The Hadoop file system of `p` under the session's conf, after
+    * [[NioLocalFileSystem.install]]: every helper here is a storage
+    * entry point. */
+  private[graft] def fileSystem(spark: SparkSession, p: Path): FileSystem = {
+    NioLocalFileSystem.install(spark)
+    p.getFileSystem(spark.sessionState.newHadoopConf())
+  }
+
   def exists(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+    fileSystem(spark, p).exists(p)
   }
 
   def delete(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+    fileSystem(spark, p).delete(p, true)
   }
 
   /** Create an empty marker file (commit markers on change batches).
@@ -685,23 +693,21 @@ object Fs {
     * empty) or not at all. */
   def touch(spark: SparkSession, path: String): Unit = {
     val p = new Path(path)
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-      .create(p, true).close()
+    fileSystem(spark, p).create(p, true).close()
   }
 
   /** Write a small UTF-8 text file (schema sidecars). Driver-side,
     * overwrite semantics. */
   def writeText(spark: SparkSession, path: String, text: String): Unit = {
     val p = new Path(path)
-    val out = p.getFileSystem(spark.sessionState.newHadoopConf())
-      .create(p, true)
+    val out = fileSystem(spark, p).create(p, true)
     try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
 
   def readText(spark: SparkSession, path: String): String = {
     val p = new Path(path)
-    val in = p.getFileSystem(spark.sessionState.newHadoopConf()).open(p)
+    val in = fileSystem(spark, p).open(p)
     try new String(in.readAllBytes(),
       java.nio.charset.StandardCharsets.UTF_8)
     finally in.close()
@@ -709,7 +715,7 @@ object Fs {
 
   def rename(spark: SparkSession, from: String, to: String): Boolean = {
     val f = new Path(from)
-    f.getFileSystem(spark.sessionState.newHadoopConf()).rename(f, new Path(to))
+    fileSystem(spark, f).rename(f, new Path(to))
   }
 
   /** Hadoop delete signals failure by returning false (no exception);
@@ -778,7 +784,7 @@ object Fs {
     * scans, never data enumeration. */
   def listSubdirs(spark: SparkSession, path: String): Seq[String] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = fileSystem(spark, p)
     if (!fs.exists(p)) Nil
     else fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName).toSeq
   }
@@ -818,7 +824,7 @@ object Fs {
     * used for sink-layout sanity checks, never data enumeration. */
   def listFiles(spark: SparkSession, path: String): Seq[String] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = fileSystem(spark, p)
     if (!fs.exists(p)) Nil
     else fs.listStatus(p).filter(_.isFile).map(_.getPath.getName).toSeq
   }
@@ -830,7 +836,7 @@ object Fs {
     val src = new Path(from)
     val dst = new Path(to)
     val conf = spark.sessionState.newHadoopConf()
-    val fs = src.getFileSystem(conf)
+    val fs = fileSystem(spark, src)
     if (!org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, conf))
       throw new java.io.IOException(s"Failed to copy $from -> $to")
   }
@@ -844,7 +850,7 @@ object Fs {
     * (observers fire before stream sinks exist). */
   def dataFiles(spark: SparkSession, tablePath: String): Seq[(String, Long)] = {
     val base = new Path(tablePath)
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = fileSystem(spark, base)
     if (!fs.exists(base)) return Nil
     val baseStr = fs.makeQualified(base).toString
     val it = fs.listFiles(base, true)

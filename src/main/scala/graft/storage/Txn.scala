@@ -763,11 +763,11 @@ object Txn {
 
   private[graft] def isSwapWindowRace(e: Throwable): Boolean = {
     val seen = scala.collection.mutable.Set[Throwable]()
-    // The two raw-substring shapes below fire on ANY exception text,
-    // so they additionally require the message to name something the
+    // The raw-substring shape below fires on ANY exception text, so
+    // it additionally requires the message to name something the
     // ENGINE owns — a `_graft*` sidecar/log/lock/tmp segment, a
-    // rename-aside suffix, or a parquet data file — before they
-    // classify. A foreign failure that merely MENTIONS a missing
+    // rename-aside suffix, or a parquet data file — before it
+    // classifies. A foreign failure that merely MENTIONS a missing
     // file (an executor-side script, a user path typo inside a
     // larger job) names none of these and fails fast instead of
     // costing maxAttempts silent retries of the body.
@@ -783,8 +783,7 @@ object Txn {
         // alongside the task part-file naming convention
         (m.contains(".parquet") && PartFileRe.findFirstIn(m).isDefined) ||
         // Spark's own output markers live inside every managed root
-        // and vanish with it mid-swap (the permission loader dies on
-        // exactly these during a root listing)
+        // and vanish with it mid-swap
         m.contains("_SUCCESS") || m.contains("_temporary")
     def walk(t: Throwable): Boolean =
       t != null && seen.add(t) && (
@@ -798,12 +797,6 @@ object Txn {
               // message text — an op-log footer read racing a
               // compactLog swap surfaces exactly this way
               (m.contains("java.io.FileNotFoundException") &&
-                enginePath(m)) ||
-              // RawLocalFileSystem's permission loader shells out to
-              // `ls` per listed file; a file a COW swap deleted
-              // mid-listing dies as a RuntimeException carrying only
-              // the shell's message (reader-vs-mutator soak shape)
-              (m.contains("No such file or directory") &&
                 enginePath(m))) ||
           walk(t.getCause))
     walk(e)

@@ -295,18 +295,6 @@ class MatViewSpec extends AnyFunSuite with SparkSpec {
       "Job aborted due to stage failure: Task 1 failed: " +
         "Caused by: java.io.FileNotFoundException: File " +
         "file:/t/part-00003-c9e1.snappy.parquet does not exist")))
-    // RawLocalFileSystem's permission loader shells out per listed
-    // file — a file deleted mid-listing dies as a RuntimeException
-    // carrying only the shell's message (reader-vs-mutator soak)
-    assert(isSwapWindowRace(new RuntimeException(
-      "Error while running command to get file permissions : " +
-        "ExitCodeException exitCode=2: ls: cannot access " +
-        "'/t/part-00000-ab.snappy.parquet': " +
-        "No such file or directory")))
-    assert(isSwapWindowRace(new RuntimeException(
-      "Error while running command to get file permissions : " +
-        "ExitCodeException exitCode=2: ls: cannot access " +
-        "'/t/_graft_changes/12/_commit': No such file or directory")))
     // FOREIGN failures that merely MENTION a missing file name no
     // engine path and must fail FAST (not cost maxAttempts silent
     // retries): an executor-side script, a user path typo
@@ -329,6 +317,21 @@ class MatViewSpec extends AnyFunSuite with SparkSpec {
     assert(!isSwapWindowRace(new RuntimeException("boom")))
     assert(!isSwapWindowRace(new IllegalArgumentException(
       "matview keys must be non-null")))
+  }
+
+  test("a data file deleted between a listing and its permission read " +
+      "classifies through the typed FileNotFoundException") {
+    import org.apache.hadoop.fs.{LocatedFileStatus, Path}
+    val src = new Path(mkSource("mv_vanish"))
+    val fs = Fs.fileSystem(spark, src)
+    val part = fs.listStatus(src).find(_.getPath.getName.startsWith("part-")).get
+    Fs.deleteChecked(spark, part.getPath.toString)
+    // FileSystem.listFiles builds one of these from every listed status
+    val e = intercept[java.io.FileNotFoundException] {
+      new LocatedFileStatus(part, null)
+    }
+    assert(Txn.isSwapWindowRace(e))
+    assert(Txn.isSwapWindowRace(new RuntimeException("listing failed", e)))
   }
 
   test("null keys refuse loudly at create") {
