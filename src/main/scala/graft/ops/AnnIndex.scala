@@ -201,7 +201,7 @@ object AnnIndex {
     try {
       val rootStr = path.stripSuffix("/")
       val root = new org.apache.hadoop.fs.Path(rootStr)
-      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+      val fs = Fs.fileSystem(spark, root)
       if (!fs.exists(root)) AbsentToken
       else Fs.readText(spark, s"$rootStr/_generation") + "|" +
         fs.listStatus(root).filter(_.isDirectory)

@@ -117,7 +117,7 @@ object Clone {
           "on the destination (it resolves the crashed commit once " +
           "the crashed run's claim ages out)")
     val dp = new org.apache.hadoop.fs.Path(d)
-    dp.getFileSystem(spark.sessionState.newHadoopConf()).mkdirs(dp)
+    Fs.fileSystem(spark, dp).mkdirs(dp)
     val token =
       try Txn.acquire(spark, d, "CLONE")
       catch {

@@ -78,8 +78,8 @@ object Delete {
       val affected = df.filter(cond).select(partCols: _*)
         .distinct().collect().map(_.toSeq).toSeq
       if (affected.isEmpty) return 0L
-      val pruned = prunedToAffected(spark, df, parts, affected)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val pruned =
+        Txn.persistPrivate(prunedToAffected(spark, df, parts, affected))
       try {
         val deleted = pruned.filter(cond).count()
         val batchDir = captureOrFence(pruned.filter(cond))
@@ -118,8 +118,7 @@ object Delete {
         deleted
       } finally pruned.unpersist()
     } else {
-      val scanned = df
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val scanned = Txn.persistPrivate(df)
       try {
         val deleted = scanned.filter(cond).count()
         if (deleted == 0L) return 0L
@@ -238,8 +237,7 @@ object MorDelete {
     val cond = coalesce(expr(condition), lit(false))
     // match against the MoR view: already-tombstoned rows can't be
     // re-deleted (keeps the returned count and the sidecar minimal)
-    val live = read(spark, storage, base, keyCols)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val live = Txn.persistPrivate(read(spark, storage, base, keyCols))
     try {
       val matched = live.filter(cond)
       val n = matched.count()
@@ -368,8 +366,7 @@ object MorDelete {
     Fs.recoverAside(spark, tombstonePath(base))
     if (!Fs.exists(spark, tombstonePath(base))) return 0L
     val before = storage.read(base, "delta").count()
-    val kept = read(spark, storage, base, keyCols)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val kept = Txn.persistPrivate(read(spark, storage, base, keyCols))
     try {
       val after = kept.count()
       // Time travel reads the RAW file timeline (tombstones are an

@@ -117,7 +117,7 @@ object GraftLog {
       r.txnBatch.foreach(g.add("txn_batch", _))
       writer.write(g)
     } finally writer.close()
-    if (!staged.getFileSystem(conf).rename(staged, p))
+    if (!Fs.fileSystem(spark, staged).rename(staged, p))
       throw new java.io.IOException(
         s"Failed to publish op-log file $staged -> $p")
   }
@@ -182,7 +182,7 @@ object GraftLog {
                                     dir: String): Seq[OpRec] = {
     val conf = spark.sessionState.newHadoopConf()
     val dp = new Path(dir)
-    val fs = dp.getFileSystem(conf)
+    val fs = Fs.fileSystem(spark, dp)
     if (!fs.exists(dp)) return Nil
     fs.listStatus(dp).toSeq
       .filter { st =>
@@ -378,7 +378,11 @@ object GraftLog {
     * swap — so at every instant a crash leaves at least one COMPLETE
     * table on disk, and `base` is only ever absent or complete, never
     * present-but-unmanaged. The original log's copy leaves with
-    * `__old`. */
+    * `__graft_old`, which is deleted as soon as the new root is in
+    * place: no replaced root is kept for readers (a lock-free read
+    * that lost it retries the live root — [[Txn.retryTransient]]). A
+    * crash before that delete leaves a `__graft_old` beside the live
+    * root, the completed-swap debris shape vacuum deletes. */
   def carryLogAndSwap(spark: SparkSession, base: String, tmp: String,
                       appendOp: Option[(String, Seq[String])] = None,
                       carryColMap: Boolean = true)
@@ -440,45 +444,7 @@ object GraftLog {
     MaintainerLease.carryInto(spark, base, tmp)
     Fs.renameChecked(spark, base, old)
     Fs.renameChecked(spark, tmp, base)
-    retireAside(spark, base, old)
-  }
-
-  /** Post-swap disposal of the replaced root: RETAIN it as an
-    * immutable sibling snapshot (`<base>__graft_snap_<millis>`) for
-    * the [[Txn.SnapshotRetainKey]] window — the lock-free reader's
-    * snapshot fallback ([[Txn.retryReadSnapshot]]) — then sweep
-    * expired snapshots (name-stamped age; one parent listing). With
-    * retention 0 the aside deletes immediately, the pre-snapshot
-    * behavior. A crash between the swap and this rename leaves a
-    * `__graft_old` WITH the live root present — the completed-swap
-    * debris shape vacuum already deletes. The retained copy holds a
-    * stale lock-file copy and sidecars; harmless — nothing ever
-    * mutates a snapshot, and vacuum sweeps expired ones too. */
-  private def retireAside(spark: SparkSession, base: String,
-                          old: String): Unit = {
-    val retain = Txn.snapshotRetainMs(spark)
-    if (retain <= 0L) { Fs.deleteChecked(spark, old); return }
-    val now = System.currentTimeMillis()
-    var snap = base + Txn.SnapshotInfix + now
-    // lock-serialized writers make a same-millis collision nearly
-    // impossible; bump rather than clobber if it happens
-    var bump = 0L
-    while (Fs.exists(spark, snap)) {
-      bump += 1; snap = base + Txn.SnapshotInfix + (now + bump)
-    }
-    Fs.renameChecked(spark, old, snap)
-    // TOLERANT delete (not deleteChecked): this sweep runs after the
-    // mutation already committed, and vacuum plans the same expired
-    // snapshots — losing that race means the work is done, and
-    // throwing here would fail a committed mutation at its caller
-    Txn.snapshots(spark, base).foreach { p =>
-      val stamp = Txn.snapshotStamp(
-        new Path(p).getName).getOrElse(Long.MaxValue)
-      if (now - stamp > retain) Fs.delete(spark, p)
-    }
-    // expired PARTITION snapshots sweep at full-root swaps too (the
-    // same later-swaps-and-vacuum-only rule, both directions)
-    PartitionSwap.sweepExpired(spark, base)
+    Fs.deleteChecked(spark, old)
   }
 
   /** The commit lock (when held — [[Txn.withTableLock]]) rides into
@@ -605,7 +571,7 @@ object GraftLog {
     MaintainerLease.carryInto(spark, base, tmp)
     Fs.renameChecked(spark, base, old)
     Fs.renameChecked(spark, tmp, base)
-    retireAside(spark, base, old)
+    Fs.deleteChecked(spark, old)
   }
 
   /** DESCRIBE DETAIL analogue for a managed table — one row of

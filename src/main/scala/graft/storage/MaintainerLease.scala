@@ -81,7 +81,7 @@ object MaintainerLease {
               owner: String): String = {
     val base = target.stripSuffix("/")
     val lp = new Path(leasePath(base))
-    val fs = lp.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = Fs.fileSystem(spark, lp)
     val token = java.util.UUID.randomUUID().toString
     val prior = Option(owned.get(base))
     // same-JVM double start: the prior hold's query is still active —
@@ -186,7 +186,7 @@ object MaintainerLease {
                     token: String): Unit = {
     val base = target.stripSuffix("/")
     val lp = new Path(leasePath(base))
-    val fs = lp.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = Fs.fileSystem(spark, lp)
     def fenced(holder: String): Nothing =
       throw new IllegalStateException(
         s"maintenance of $base FENCED: the maintainer lease is " +
@@ -234,7 +234,7 @@ object MaintainerLease {
   /** (holder owner string, age ms), for diagnostics. */
   def heldBy(spark: SparkSession, target: String): Option[(String, Long)] = {
     val lp = new Path(leasePath(target.stripSuffix("/")))
-    val fs = lp.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = Fs.fileSystem(spark, lp)
     try {
       val st = fs.getFileStatus(lp)
       val owner =

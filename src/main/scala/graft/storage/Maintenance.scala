@@ -121,7 +121,7 @@ object Maintenance {
         Txn.lockPath(base + suf))
     val liveLock = lockCandidates.flatMap { p =>
       val lp = new Path(p)
-      val lfs = lp.getFileSystem(spark.sessionState.newHadoopConf())
+      val lfs = Fs.fileSystem(spark, lp)
       try {
         val st = lfs.getFileStatus(lp)
         val ageMs = System.currentTimeMillis() - st.getModificationTime
@@ -153,7 +153,7 @@ object Maintenance {
     // mtimes are synthetic), dir mtime for an empty stage.
     {
       val basePath = new Path(base)
-      val pfs = basePath.getFileSystem(spark.sessionState.newHadoopConf())
+      val pfs = Fs.fileSystem(spark, basePath)
       val parent = basePath.getParent
       val stageNamePrefix =
         basePath.getName + WriteAuditPublish.StagePrefix
@@ -194,47 +194,6 @@ object Maintenance {
                   "orphan horizon — possibly a live audit; left for " +
                   "a later vacuum")
           }
-      }
-    }
-
-    // --- expired reader snapshots: a completed COW swap retains the
-    // replaced root as `<base>__graft_snap_<millis>` for the
-    // Txn.SnapshotRetainKey window (the lock-free reader's snapshot
-    // fallback). Age rides in the NAME — no mtime trust needed. A
-    // snapshot within the window may be mid-read; skip-reported.
-    {
-      val retain = Txn.snapshotRetainMs(spark)
-      val now = System.currentTimeMillis()
-      Txn.snapshots(spark, base).foreach { p =>
-        val stamp = Txn.snapshotStamp(new Path(p).getName)
-          .getOrElse(Long.MaxValue)
-        val age = now - stamp
-        if (age > retain)
-          actions += delete(p,
-            s"expired reader snapshot (age $age ms > $retain ms " +
-              "retention window)")
-        else
-          actions += VacuumAction("skip", p, "",
-            s"reader snapshot age $age ms within the $retain ms " +
-              "retention window — possibly mid-read; left for a " +
-              "later vacuum")
-      }
-      // partition-scoped snapshots (consumed PartitionSwap asides,
-      // `<base>__graft_partsnap_<millis>`) — same window, same
-      // name-carried age, same mid-read caution
-      Txn.partSnapshots(spark, base).foreach { p =>
-        val stamp = Txn.partSnapshotStamp(new Path(p).getName)
-          .getOrElse(Long.MaxValue)
-        val age = now - stamp
-        if (age > retain)
-          actions += delete(p,
-            s"expired partition snapshot (age $age ms > $retain ms " +
-              "retention window)")
-        else
-          actions += VacuumAction("skip", p, "",
-            s"partition snapshot age $age ms within the $retain ms " +
-              "retention window — possibly mid-composed-read; left " +
-              "for a later vacuum")
       }
     }
 
@@ -332,8 +291,7 @@ object Maintenance {
         actions += delete(p, "staging that never renamed"))
 
       // --- interior sweep: sidecar/generation debris inside the root
-      val conf = spark.sessionState.newHadoopConf()
-      val fs = new Path(base).getFileSystem(conf)
+      val fs = Fs.fileSystem(spark, new Path(base))
       def sweep(dir: Path): Unit = {
         val children = fs.listStatus(dir).filter(_.isDirectory)
         val names = children.map(_.getPath.getName).toSet
@@ -446,7 +404,7 @@ object Maintenance {
           // taken a fresh one — deleting that live lock would re-open
           // the double-holder window this sweep exists to close
           val lp = new Path(a.target)
-          val lfs = lp.getFileSystem(spark.sessionState.newHadoopConf())
+          val lfs = Fs.fileSystem(spark, lp)
           val unchanged =
             try lfs.getFileStatus(lp).getModificationTime.toString == a.dest
             catch { case _: java.io.FileNotFoundException => false }

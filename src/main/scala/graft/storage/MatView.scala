@@ -535,8 +535,7 @@ object MatView {
     state.withColumn(BucketCol, bucketIdCol(m))
       .repartition(col(BucketCol))
       .write.partitionBy(BucketCol).parquet(stage)
-    val fs = new org.apache.hadoop.fs.Path(intoDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = Fs.fileSystem(spark, new org.apache.hadoop.fs.Path(intoDir))
     val ids = Fs.listSubdirs(spark, stage)
       .filter(_.startsWith(BucketCol + "="))
       .map(_.stripPrefix(BucketCol + "=").toInt)
@@ -578,8 +577,7 @@ object MatView {
     val grace = spark.conf.getOption(GenGraceKey).map(_.toLong)
       .getOrElse(GenGraceDefaultMs)
     val now = System.currentTimeMillis()
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = Fs.fileSystem(spark, new org.apache.hadoop.fs.Path(base))
     // this sweep is garbage collection ONLY: a failure here must
     // never fail the refresh it runs inside (the view's freshness is
     // healthy regardless) — but it must not be SILENT either, or a
@@ -597,7 +595,7 @@ object MatView {
       }
     // age authority: the BIRTH STAMP the staging write put in the
     // dir's own name-space (`_graft_born_<millis>`) — creation time
-    // rides in a NAME, like __graft_snap_, so age never trusts mtimes
+    // rides in a NAME, so age never trusts mtimes
     // (synthetic / upload-batched on object stores: a fresh crash
     // orphan could otherwise age instantly past grace under a reader
     // still resolving through the previous sidecar). Mtime only as
@@ -742,7 +740,7 @@ object MatView {
     val meta0 = probe.copy(source = source.stripSuffix("/"),
       lastBatch = Long.MinValue, keyPhys = keys.map(mapping.physicalOf),
       valuePhys = valueCols.map(mapping.physicalOf))
-    withRetries(maxAttempts) {
+    Txn.retryTransient(maxAttempts) {
       rebuildOnce(spark, storage, base, meta0)
     }
   }
@@ -768,7 +766,7 @@ object MatView {
   def refresh(spark: SparkSession, storage: BasicStorage,
               viewPath: String, maxAttempts: Int = 5): MatViewRefresh = {
     val base = viewPath.stripSuffix("/")
-    withRetries(maxAttempts) {
+    Txn.retryTransient(maxAttempts) {
       val meta = loadMeta(spark, base)
       val source = meta.source
       val snap = Txn.snapshot(spark, source)
@@ -1413,13 +1411,4 @@ object MatView {
     Fs.writeText(spark, tmp, metaJson(m))
     Fs.swapInStaged(spark, sc, tmp)
   }
-
-  private def withRetries(maxAttempts: Int)
-                         (body: => MatViewRefresh): MatViewRefresh =
-    // ConcurrentWriteException = a commit (or a held lock) raced the
-    // attempt; swap-window transients = a lock-free read landed in a
-    // COW commit's two-rename window. Both leave the table complete
-    // by the next look — Txn.retryTransient retries bounded and
-    // rethrows genuine failures loudly.
-    Txn.retryTransient(maxAttempts)(body)
 }

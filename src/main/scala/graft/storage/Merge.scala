@@ -141,9 +141,13 @@ object Merge {
     * merges must capture changes for the span you want to travel.
     *
     * Scale shape: one metadata-sized stamp listing (distinct batch
-    * dirs), then one anti-join + union per stepped-back batch —
-    * cost scales with the changes stepped over, never with table
-    * size × versions. Chained plans deepen one anti-join per batch,
+    * dirs), one eager scan pinning the current state in executor
+    * blocks when any batch is stepped (so a concurrent commit cannot
+    * delete the data under the walk), then one anti-join + union per
+    * stepped-back batch — cost scales with the table once plus the
+    * changes stepped over, never with table size × versions. The
+    * pinned frame has executor-block durability, like the
+    * checkpoints below. Chained plans deepen one anti-join per batch,
     * so a LONG hop (tens of batches) would hand Catalyst an
     * ever-deeper tree: `checkpointEvery = N` truncates lineage with
     * an eager localCheckpoint every N stepped batches, bounding plan
@@ -151,7 +155,7 @@ object Merge {
     * (executor-block durability — right for interactive travel; a
     * long-lived job on a preemptible cluster should instead replay
     * FORWARD from a stored snapshot it controls). 0 = never
-    * (short-hop default; no materialization cost). */
+    * (short-hop default; no materialization beyond the pin). */
   def readAsOf(spark: SparkSession, storage: BasicStorage, path: String,
                keyCols: Seq[String], asOfBatch: Long,
                checkpointEvery: Int = 0): DataFrame = {
@@ -227,40 +231,8 @@ object Merge {
     // capture on a busy table. A genuinely crashed capture (no lock,
     // or one stale past the timeout) keeps the loud terminal refusal.
     // Batches at or below asOfBatch are never stepped and don't matter.
-    //
-    // EXCEPT on a RETAINED SNAPSHOT root (<t>__graft_snap_<ms>): that
-    // root is FROZEN — its lock file is a parked copy that never
-    // releases — and the capture that was IN FLIGHT at park time left
-    // an unmarked batch that is provably NEVER-APPLIED to this root's
-    // data (the COW park happens before the marker lands; the marker
-    // went to the NEW live root). But "unmarked on a frozen root"
-    // does NOT mean "in flight at park": a capture that crashed in
-    // the crashed-writer window (data swap landed, marker never
-    // written) leaves an APPLIED-but-unmarked batch that a later
-    // mutation then parks along with the root — skipping it would
-    // silently serve data WITH the crashed batch's changes while
-    // claiming the pre-state. The two are distinguishable because
-    // captures are lock-serialized with monotone stamps: a park
-    // strands AT MOST ONE in-flight capture, it must hold the
-    // HIGHEST stamp in the parked feed copy, and the parked lock
-    // file names its op (the lock rides the park rename). So an
-    // unmarked batch is classified never-applied ONLY when it is the
-    // strict maximum of every feed stamp AND the parked lock op is a
-    // change-capturing mutation (a root parked by OPTIMIZE/ALTER/…
-    // had no capture in flight — any unmarked batch there crashed
-    // earlier). Everything else keeps the loud crashed-capture
-    // refusal. An UNCAPTURED parking mutation shares the capturing
-    // op strings (MERGE/DELETE), but it barrier-fences the feed
-    // BEFORE its swap, so a travel below a crashed batch it parked
-    // is already refused at the horizon check above. Without the
-    // skip, a snapshot parked mid-capture is permanently
-    // untravelable — the young lock copy reads as a live writer
-    // (retry forever), then as crashed (terminal) after it ages.
-    val frozen = Txn.snapshotStamp(
-      new org.apache.hadoop.fs.Path(path.stripSuffix("/")).getName)
-      .isDefined
     val uncommitted = newer.filterNot(isBatchCommitted(spark, path, _))
-    if (uncommitted.nonEmpty && !frozen) {
+    if (uncommitted.nonEmpty) {
       val live = Txn.heldBy(spark, path)
         .exists(_._2 <= Txn.lockTimeoutMs(spark))
       // Probe-order race: a writer can stamp its markers and release
@@ -290,60 +262,31 @@ object Merge {
             "re-run it (a retry captures a fresh committed batch) or " +
             "Maintenance.vacuum the orphan, which fences travel at it")
     }
-    // frozen snapshot: skip ONLY the provably never-applied batch
-    // (strict max stamp + capture-capable parked lock op — see the
-    // classification comment above); any other unmarked batch is a
-    // capture that crashed BEFORE the park, frozen into this root
-    // with its applied-ness unknowable — stepping or skipping it
-    // could both be wrong, and no retry can ever resolve it, so the
-    // refusal is terminal
-    val neverApplied: Set[Long] =
-      if (!frozen || uncommitted.isEmpty) Set.empty
-      else {
-        val maxStamp = feedStamps.max
-        val parkedCapture = Txn.heldBy(spark, path)
-          .exists(h => CaptureCapableLockOps.contains(h._1))
-        if (parkedCapture) uncommitted.filter(_ == maxStamp).toSet
-        else Set.empty
-      }
-    val frozenCrashed =
-      if (frozen) uncommitted.filterNot(neverApplied) else Nil
-    if (frozenCrashed.nonEmpty)
-      throw new IllegalStateException(
-        s"time travel to batch $asOfBatch on retained snapshot $path " +
-          s"must step across change batch(es) " +
-          s"${frozenCrashed.mkString(", ")} that have no commit " +
-          "marker and cannot be the capture in flight at park time " +
-          "(not the highest feed stamp, or the root was parked by a " +
-          "non-capturing mutation) — a captured mutation crashed " +
-          "BEFORE this snapshot was parked, and whether its changes " +
-          "reached the data is frozen unknowable here; travel the " +
-          "live table instead (where a re-run or vacuum can resolve " +
-          "the orphan)")
-    // stepping a never-applied batch would un-apply changes this
-    // root never had
-    val steps = if (frozen) newer.filterNot(neverApplied) else newer
-    steps.zipWithIndex.foldLeft(current) { case (df, (b, i)) =>
+    // PIN the current state before walking back. Unpinned, the walk
+    // reads the live root's data files in its LAST stage, after one
+    // broadcast per stepped batch, so a hop that outlasts a hot
+    // writer's commit interval loses every live-root retry to the
+    // swap that deletes them. One eager scan into executor blocks
+    // (not shared with other queries) ends that exposure here; the
+    // walk then reads only those blocks and the feed, whose batch
+    // files keep their names across swaps (carried by copy). The scan
+    // reads the files `current` listed BEFORE the stamp listing and
+    // the marker checks above, so a swap in between still fails it
+    // (a retryable swap-window race) — the pinned state can never be
+    // newer than the stamps walked back over it.
+    val pinned = if (newer.isEmpty) current
+      else current.localCheckpoint(eager = true)
+    newer.zipWithIndex.foldLeft(pinned) { case (df, (b, i)) =>
       val stepped =
         inverseReplay(df, feed.filter(col("batch") === b), keyCols)
       // truncate lineage mid-hop only — the LAST step returns the
       // caller a lazy frame as before
       if (checkpointEvery > 0 && (i + 1) % checkpointEvery == 0 &&
-          i + 1 < steps.length)
+          i + 1 < newer.length)
         stepped.localCheckpoint()
       else stepped
     }
   }
-
-  /** Lock-op strings of mutations that can write a change batch
-    * (merge, captured delete, captured restore). Used by the frozen-
-    * snapshot travel classification: only a root parked by one of
-    * these can have had a capture in flight at park time. Deliberately
-    * conservative — an op missing from this set makes travel REFUSE
-    * (never silently skip), so a future capturing mutation that
-    * forgets to register here degrades loud, not wrong. */
-  private[storage] val CaptureCapableLockOps =
-    Set("MERGE", "DELETE", "RESTORE")
 
   private[storage] val ChangesPruneApp = "graft_changes_prune"
   private[storage] val ChangesOverwriteApp = "graft_changes_overwrite"
@@ -562,7 +505,7 @@ object Merge {
                               partitionFields: Seq[String]): Boolean = {
     val base = path.stripSuffix("/")
     val p = new org.apache.hadoop.fs.Path(base)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).mkdirs(p)
+    Fs.fileSystem(spark, p).mkdirs(p)
     val token =
       try Txn.acquire(spark, base, "CREATE")
       catch { case _: ConcurrentWriteException => return false }
@@ -823,7 +766,7 @@ object Merge {
     val cowRewrite = effectiveParts.isEmpty || evolving
     val scannedFull =
       if (cowRewrite)
-        prunedFull.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        Txn.persistPrivate(prunedFull)
       else prunedFull
     try {
 

@@ -23,11 +23,10 @@ import org.apache.spark.sql.SparkSession
   * surviving rows) rename into the aside with no replacement; brand
   * NEW partitions (no live dir) rename in after their birth is
   * recorded in the aside's manifest. Once every swap landed, the
-  * aside retires at the commit point: retained as the sibling
-  * partition snapshot `<base>__graft_partsnap_<millis>` for the
-  * [[Txn.SnapshotRetainKey]] window (the lock-free composed reader's
-  * fallback — [[Txn.retryReadComposed]]), or deleted outright when
-  * retention is off.
+  * aside retires at the commit point — one rename to its `__consumed`
+  * name — and is then deleted: no replaced partition copy is kept for
+  * readers (a lock-free read that lost one retries the live root —
+  * [[Txn.retryTransient]]).
   *
   * Crash contract: a crash mid-commit leaves some partitions swapped
   * and some not — plus possibly one riding in the aside between its
@@ -62,18 +61,16 @@ object PartitionSwap {
            removed: Seq[Seq[Any]] = Nil): Unit = {
     val aside = asidePath(base)
     Fs.deleteChecked(spark, aside) // heal() ran at mutation entry
-    val fs = new Path(base)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = Fs.fileSystem(spark, new Path(base))
     // partitions this swap CREATES are recorded in the aside's born
     // dir, and each record lands BEFORE its dir's rename into place
     // (record-before-data): [[heal]] must roll a crashed swap's born
     // dirs back (they belong to a mutation that never committed —
     // leaving one live would serve a moved row twice against the
-    // restored old copy), and [[Txn.composeSnapshot]] must exclude
-    // them from its pre-swap reconstruction for the same reason. A
-    // record without its dir is a harmless no-op on both paths; a dir
-    // without its record would be the silent half-applied heal this
-    // ordering exists to prevent. ONE IMMUTABLE FILE PER RECORD,
+    // restored old copy). A record without its dir is a harmless
+    // no-op; a dir without its record would be the silent
+    // half-applied heal this ordering exists to prevent. ONE
+    // IMMUTABLE FILE PER RECORD,
     // published by rename (content = the hive fragment): rewriting a
     // single manifest in place would truncate EXISTING records in the
     // crash window — worse than no record, since a torn line could
@@ -123,69 +120,21 @@ object PartitionSwap {
     // heal() would then restore as live partitions — a partition
     // serving an arbitrary subset of its rows. A consumed root is
     // never healed from, only swept.
-    //
-    // With snapshot retention on, the consumed aside is RETAINED as
-    // `<base>__graft_partsnap_<millis>` for the same window full-root
-    // COW swaps give ([[Txn.SnapshotRetainKey]]): it is already a
-    // complete pre-swap copy of every replaced/removed partition, so
-    // retention is one rename — the partitioned-table half of the
-    // lock-free reader's snapshot fallback ([[Txn.retryReadComposed]]
-    // overlays it on the live root's untouched partitions). Swept
-    // only at later swaps and in vacuum, never from a read path.
     if (Fs.exists(spark, aside)) {
-      val retain = Txn.snapshotRetainMs(spark)
-      if (retain <= 0L) {
-        Fs.deleteChecked(spark, consumedPath(base))
-        Fs.renameChecked(spark, aside, consumedPath(base))
-      } else {
-        val now = System.currentTimeMillis()
-        var snap = base.stripSuffix("/") + Txn.PartSnapInfix + now
-        var bump = 0L
-        while (Fs.exists(spark, snap)) {
-          bump += 1
-          snap = base.stripSuffix("/") + Txn.PartSnapInfix + (now + bump)
-        }
-        Fs.renameChecked(spark, aside, snap)
-      }
+      Fs.deleteChecked(spark, consumedPath(base))
+      Fs.renameChecked(spark, aside, consumedPath(base))
     }
     Fs.deleteChecked(spark, consumedPath(base))
-    sweepExpired(spark, base)
   }
 
-  /** Sweep retained partition snapshots past the retention window
-    * (age in the NAME — no mtime trust). Tolerant deletes: this runs
-    * after the commit point, and vacuum plans the same targets. */
-  private[storage] def sweepExpired(spark: SparkSession,
-                                    base: String): Unit = {
-    val retain = Txn.snapshotRetainMs(spark)
-    val now = System.currentTimeMillis()
-    Txn.partSnapshots(spark, base).foreach { p =>
-      val stamp = Txn.partSnapshotStamp(
-        new Path(p).getName).getOrElse(Long.MaxValue)
-      if (now - stamp > retain) Fs.delete(spark, p)
-    }
-  }
-
-  /** (absolute leaf dir, path relative to `base`) for every LIVE
-    * hive-layout partition directory under a table root — the
-    * composed snapshot read's untouched-partition set. Empty for
-    * unpartitioned roots. */
-  def liveLeaves(spark: SparkSession,
-                 base: String): Seq[(String, String)] =
-    partitionLeaves(spark, base.stripSuffix("/"))
-
-  /** THE hive-leaf walker, shared by [[liveLeaves]] and
-    * [[asideLeaves]]: [[Txn.composeSnapshot]] matches the two sides'
-    * relative fragments by STRING EQUALITY, so both must derive them
-    * from one walker — a qualification or escaping fix applied to one
-    * copy would silently break the overlay. Descends only `k=v`
-    * segments (sidecars — underscore dirs, and their interior
-    * `batch=` dirs — never appear; nor does the aside's born
-    * manifest, a file); leaf = a `=`-dir with no `=` children. */
-  private def partitionLeaves(spark: SparkSession,
-                              base: String): Seq[(String, String)] = {
-    val root = new Path(base)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+  /** (absolute leaf dir, path relative to `aside`) for every parked
+    * partition dir under an aside root (the mirrored hive layout).
+    * Descends only `k=v` segments (the born manifest's underscore dir
+    * never appears); leaf = a `=`-dir with no `=` children. */
+  def asideLeaves(spark: SparkSession,
+                  aside: String): Seq[(String, String)] = {
+    val root = new Path(aside.stripSuffix("/"))
+    val fs = Fs.fileSystem(spark, root)
     val rootStr = fs.makeQualified(root).toString
     def walk(dir: Path): Seq[(String, String)] = {
       val parts = fs.listStatus(dir).toSeq.filter(st =>
@@ -193,7 +142,7 @@ object PartitionSwap {
           st.getPath.getName.contains("="))
       if (parts.isEmpty) {
         val p = fs.makeQualified(dir).toString
-        if (p == rootStr) Nil // unpartitioned (or empty) root
+        if (p == rootStr) Nil // empty aside
         else Seq((p, p.stripPrefix(rootStr).stripPrefix("/")))
       } else parts.flatMap(s => walk(s.getPath))
     }
@@ -207,18 +156,16 @@ object PartitionSwap {
   /** Record dir (aside-root-level, underscore-named — never walked as
     * a partition) holding one immutable rename-published file per
     * partition the swap CREATED, each file's content the hive
-    * fragment. The heal's rollback list and the composed snapshot
-    * read's exclusion record. */
+    * fragment: the heal's rollback list. */
   val BornDirName = "_graft_born_parts"
 
-  /** The born-partition fragments a retained snapshot (or aside)
-    * recorded; empty when the swap created none. In-flight `.tmp`
-    * records (crash between write and publish-rename) are ignored —
-    * their dirs never renamed in. */
-  def bornParts(spark: SparkSession, snapRoot: String): Seq[String] = {
-    val dir = snapRoot.stripSuffix("/") + "/" + BornDirName
+  /** The born-partition fragments an aside recorded; empty when the
+    * swap created none. In-flight `.tmp` records (crash between write
+    * and publish-rename) are ignored — their dirs never renamed in. */
+  def bornParts(spark: SparkSession, aside: String): Seq[String] = {
+    val dir = aside.stripSuffix("/") + "/" + BornDirName
     val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = Fs.fileSystem(spark, p)
     if (!fs.exists(p)) Nil
     else if (fs.getFileStatus(p).isFile)
       // an older build's single-file record: healing without its born
@@ -265,12 +212,4 @@ object PartitionSwap {
     }
     Fs.deleteChecked(spark, aside)
   }
-
-  /** (absolute leaf dir, path relative to `aside`) for every parked
-    * partition dir under an aside (or retained partition-snapshot)
-    * root — the mirrored hive layout walked by the same
-    * [[partitionLeaves]] as the live side. */
-  def asideLeaves(spark: SparkSession,
-                  aside: String): Seq[(String, String)] =
-    partitionLeaves(spark, aside.stripSuffix("/"))
 }

@@ -70,307 +70,17 @@ case class OpLogSnapshot(entries: Long, maxSeq: Long)
   * What this does NOT give: cross-table transactions, or full
   * MVCC-style concurrent readers of in-flight state (readers always
   * see the last complete table — the swap discipline's existing
-  * guarantee). What readers DO get is a bounded SNAPSHOT WINDOW: a
-  * completed COW swap RETAINS the replaced root as an immutable
-  * sibling snapshot (`<base>__graft_snap_<millis>`) for
-  * [[SnapshotRetainKey]] ms before sweeping it. A lock-free read that
-  * keeps losing the live root to back-to-back swaps (a tight-loop
-  * writer, where plain [[retryTransient]] can livelock — each
-  * attempt's plan-to-execute span overlaps the next swap) falls back
-  * to the newest retained snapshot via [[retryReadSnapshot]]: the
-  * snapshot is never mutated again, so that attempt terminates, at
-  * the cost of reading a state up to the retention window stale —
-  * the same trade MVCC formats make, with the window explicit.
-  * PARTITION-SCOPED commits ([[PartitionSwap]] — the hot write path
-  * of partitioned tables) get the same window: a completed commit
-  * retains its consumed aside (the pre-swap copies of every touched
-  * partition) as `<base>__graft_partsnap_<millis>`, and
-  * [[retryReadComposed]] overlays those immutable copies on the live
-  * root's untouched partitions, pinning every contended partition to
-  * a stable path across retries. */
+  * guarantee). A completed commit swap DELETES the root (or the
+  * partition copies) it replaced, so old versions are not kept
+  * beside the table: a lock-free read that lands in a swap window
+  * dies transiently and retries against the LIVE root through
+  * [[retryTransient]], which [[isSwapWindowRace]] classifies. A read
+  * longer than the gap between a hot writer's commits can exhaust
+  * those retries; isolation for such reads belongs to a versioned
+  * log, not to sibling copies of replaced roots. */
 object Txn {
 
   val LockFileName = "_graft_txn_lock"
-
-  /** How long a completed COW swap's replaced root is RETAINED as an
-    * immutable sibling snapshot before the sweep — the lock-free
-    * reader's snapshot window (see the object doc). Size it above the
-    * longest read you expect to race a hot writer; 0 disables
-    * retention (the pre-snapshot delete-immediately behavior). The
-    * retained copy is a RENAME of the root a rewrite had already
-    * replaced, so retention adds no write cost — only delayed
-    * deletion, bounded by (swap frequency × table size × window).
-    * Expired snapshots sweep at the table's NEXT swap and in
-    * [[Maintenance.vacuum]] — deliberately never from a read path
-    * (pollers must stay pure readers). Consequence: a table's LAST
-    * rewrite retains one snapshot until a later mutation or vacuum
-    * reclaims it — include matured tables in the routine vacuum
-    * pass, exactly as Delta's vacuum reclaims its retained files. */
-  val SnapshotRetainKey = "spark.graft.cowSnapshotRetainMs"
-  val SnapshotRetainDefaultMs: Long = 60000L
-
-  /** Sibling-name infix of a retained snapshot: the creation millis
-    * ride IN THE NAME so age never depends on (object-store-synthetic)
-    * directory mtimes. */
-  private[storage] val SnapshotInfix = "__graft_snap_"
-
-  private[graft] def snapshotRetainMs(spark: SparkSession): Long =
-    confMs(spark, SnapshotRetainKey, SnapshotRetainDefaultMs)
-
-  /** Sibling-name infix of a retained PARTITION-SCOPED snapshot: the
-    * consumed rename-aside mirror of a completed [[PartitionSwap]]
-    * commit, holding the REPLACED/REMOVED partitions' pre-swap copies
-    * in the mirrored hive layout. Unlike a full-root snapshot it is
-    * NOT a complete table — [[composeSnapshot]] overlays it on the
-    * live root's untouched partitions. Creation millis in the name,
-    * like [[SnapshotInfix]]. */
-  private[storage] val PartSnapInfix = "__graft_partsnap_"
-
-  /** Retained snapshots of `path`, oldest → newest (absolute paths).
-    * One parent-dir listing; empty when retention is off or nothing
-    * is retained. */
-  def snapshots(spark: SparkSession, path: String): Seq[String] =
-    siblingSnaps(spark, path, SnapshotInfix)
-
-  /** Retained partition-scoped snapshots (consumed PartitionSwap
-    * asides), oldest → newest. */
-  def partSnapshots(spark: SparkSession, path: String): Seq[String] =
-    siblingSnaps(spark, path, PartSnapInfix)
-
-  private def siblingSnaps(spark: SparkSession, path: String,
-                           infix: String): Seq[String] = {
-    val base = new Path(path.stripSuffix("/"))
-    val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-    val parent = base.getParent
-    val prefix = base.getName + infix
-    if (parent == null || !fs.exists(parent)) Nil
-    else fs.listStatus(parent).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
-      .sortBy(st => stampOf(st.getPath.getName, infix).getOrElse(0L))
-      .map(_.getPath.toString)
-  }
-
-  private[storage] def snapshotStamp(name: String): Option[Long] =
-    stampOf(name, SnapshotInfix)
-
-  private[storage] def partSnapshotStamp(name: String): Option[Long] =
-    stampOf(name, PartSnapInfix)
-
-  private def stampOf(name: String, infix: String): Option[Long] = {
-    val i = name.lastIndexOf(infix)
-    if (i < 0) None
-    else name.substring(i + infix.length).toLongOption
-  }
-
-  /** Bounded retry for a lock-free READ racing a hot writer, with the
-    * snapshot fallback the object doc describes: the first attempt
-    * reads the LIVE root; an attempt that dies in a swap window (or
-    * loses an [[assertUnchanged]]) retries against the newest
-    * retained snapshot when one exists — an immutable complete copy
-    * of a recent committed state, where the read cannot be raced
-    * again. `body` receives the root to read (live or snapshot) and
-    * must resolve EVERYTHING through it. Falls back to the live root
-    * when no snapshot is retained (retention off / already swept) —
-    * then this degrades to exactly [[retryTransient]]. */
-  def retryReadSnapshot[T](spark: SparkSession, path: String,
-                           maxAttempts: Int = 5, sleepMs: Long = 200L)
-                          (body: String => T): T = {
-    require(maxAttempts >= 1, "maxAttempts must be >= 1")
-    val base = path.stripSuffix("/")
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val root =
-        if (attempt == 1) base
-        else snapshots(spark, base).lastOption.getOrElse(base)
-      try return body(root)
-      catch {
-        case _: ConcurrentWriteException if attempt < maxAttempts =>
-          Thread.sleep(sleepMs)
-        case e if attempt < maxAttempts && isSwapWindowRace(e) =>
-          Thread.sleep(sleepMs)
-      }
-    }
-    sys.error("unreachable")
-  }
-
-  /** [[retryReadSnapshot]] for PARTITIONED tables, where the retained
-    * fallback is not a complete root: a [[PartitionSwap]] commit
-    * retains its consumed aside as `<base>__graft_partsnap_<millis>`
-    * — the pre-swap copies of exactly the partitions it touched — and
-    * the fallback OVERLAYS those on the live root's untouched
-    * partitions ([[composeSnapshot]]). `body` receives the composed
-    * frame (the raw parquet view of the table, as reading the root
-    * directly would give).
-    *
-    * Convergence under a tight-loop mutator — the case plain retries
-    * livelock on: every partition a mutation touches mid-read resolves
-    * on the NEXT attempt through an IMMUTABLE parked copy (asides are
-    * never mutated once parked, only age-swept), so each retry pins
-    * more of the plan to stable paths; only never-yet-touched
-    * partitions still read live, and those are exactly the ones no
-    * mutation is racing. The composed state is the table just before
-    * the OLDEST retained partition swap — up to the retention window
-    * stale, the same trade the full-root snapshot makes. A full-root
-    * COW swap in the window supersedes older partition snapshots (the
-    * live lineage they overlay is gone): composition uses only
-    * partition snapshots NEWER than the newest full-root snapshot and
-    * otherwise falls back to that complete snapshot, exactly like
-    * [[retryReadSnapshot]]. */
-  def retryReadComposed[T](spark: SparkSession, path: String,
-                           maxAttempts: Int = 8, sleepMs: Long = 200L)
-                          (body: org.apache.spark.sql.DataFrame => T): T = {
-    // 8 attempts, re-measured: each retry composes with strictly MORE
-    // parked partition copies (every swap that beat the last attempt
-    // parked its replaced dir), so the read converges — but the op-log
-    // fast path roughly tripled a tight mutator loop's swap cadence,
-    // and the old 5-attempt budget occasionally exhausted before
-    // convergence under the ConcurrencySpec partitioned soak.
-    require(maxAttempts >= 1, "maxAttempts must be >= 1")
-    val base = path.stripSuffix("/")
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      try {
-        // frame construction (schema inference, leaf listing) races
-        // swaps exactly like execution — build inside the try
-        val frame =
-          if (attempt == 1) spark.read.parquet(base)
-          else composeSnapshot(spark, base).getOrElse(
-            spark.read.parquet(
-              snapshots(spark, base).lastOption.getOrElse(base)))
-        return body(frame)
-      } catch {
-        case _: ConcurrentWriteException if attempt < maxAttempts =>
-          Thread.sleep(sleepMs)
-        case e if attempt < maxAttempts && isSwapWindowRace(e) =>
-          Thread.sleep(sleepMs)
-      }
-    }
-    sys.error("unreachable")
-  }
-
-  /** The composed pre-swap view: parked partition copies (oldest
-    * retained partition snapshot first — first-wins per partition,
-    * reconstructing the state just before the oldest retained swap)
-    * overlaid on the live root's untouched partitions. None when no
-    * usable partition snapshot is retained (unpartitioned table,
-    * retention off, or a newer full-root snapshot supersedes them
-    * all). */
-  private[graft] def composeSnapshot(spark: SparkSession, base: String)
-      : Option[org.apache.spark.sql.DataFrame] = {
-    // the torn-walk re-check below is only SOUND with retention on:
-    // every swap then leaves a durable record (its aside while in
-    // flight, its partition snapshot once committed) for the re-walk
-    // to find. With retention disabled a swap completing entirely
-    // inside the walk window leaves nothing, and a compose would mix
-    // its new content silently — so retention off means no composed
-    // fallback at all (retryReadComposed degrades to live-root
-    // retries, the documented pre-snapshot behavior).
-    if (snapshotRetainMs(spark) <= 0L) return None
-    val cut = snapshots(spark, base)
-      .flatMap(p => snapshotStamp(new Path(p).getName)).maxOption
-    val usable = partSnapshots(spark, base).filter { p =>
-      val s = partSnapshotStamp(new Path(p).getName).getOrElse(0L)
-      cut.forall(s > _)
-    }
-    // the LIVE aside (`__graft_partaside`) is the newest pseudo-
-    // snapshot: an IN-FLIGHT (or crashed) partition swap parks each
-    // original there BEFORE renaming its replacement in, so a
-    // partition that already shows post-swap content live has its
-    // pre-swap copy here — without consulting it, a compose
-    // constructed mid-commit would silently mix that partition's NEW
-    // content into the pre-swap reconstruction (no error, no retry:
-    // the torn-read hole). The aside is uncommitted, so it is always
-    // part of the current lineage (no cut filter); it vanishing
-    // mid-read (commit rename / heal) is an engine-path FNFE the
-    // caller's retry classifies.
-    val liveAside = Some(PartitionSwap.asidePath(base))
-      .filter(Fs.exists(spark, _)).toSeq
-    if (usable.isEmpty && liveAside.isEmpty) return None
-    // first event per partition, OLDEST snapshot first, decides its
-    // fate in the reconstructed state:
-    //  - PARKED there → that copy IS the pre-cut content (untouched
-    //    between the cut and its first park, by definition of first);
-    //  - BORN there (the swap's born manifest) → the partition did
-    //    not exist at the cut — excluded entirely (a parked copy in a
-    //    LATER snap holds post-birth rows and must not resurrect);
-    //  - no event → untouched all window: read live.
-    val decided = scala.collection.mutable
-      .LinkedHashMap[String, Option[(String, String)]]()
-    (usable ++ liveAside).foreach { snapRoot =>
-      PartitionSwap.bornParts(spark, snapRoot).foreach { rel =>
-        if (!decided.contains(rel)) decided(rel) = None
-      }
-      PartitionSwap.asideLeaves(spark, snapRoot).foreach {
-        case (leaf, rel) =>
-          if (!decided.contains(rel)) decided(rel) = Some((snapRoot, leaf))
-      }
-    }
-    if (decided.isEmpty) return None
-    val chosen = decided.collect { case (rel, Some(v)) => rel -> v }
-    val live = PartitionSwap.liveLeaves(spark, base)
-      .filterNot { case (_, rel) => decided.contains(rel) }
-    if (chosen.isEmpty && live.isEmpty) return None
-    // one read per root — basePath recovers the partition columns
-    // from the mirrored hive layout
-    val bySnap = chosen.values.toSeq.groupBy(_._1).toSeq
-      .sortBy(_._1).map { case (root, vs) => (root, vs.map(_._2)) }
-    val frames =
-      (if (live.nonEmpty)
-        Seq(spark.read.option("basePath", base)
-          .parquet(live.map(_._1): _*))
-      else Nil) ++
-        bySnap.map { case (root, leaves) =>
-          spark.read.option("basePath", root).parquet(leaves: _*) }
-    // align on the first frame's schema: partition-value INFERENCE
-    // runs per read over disjoint value subsets and can disagree on
-    // types; a column a parked copy lacks (pre-evolution files —
-    // only possible when no full-root snapshot fenced the window)
-    // reads as typed null
-    import org.apache.spark.sql.functions.{col, lit}
-    val ref = frames.head.schema
-    val aligned = frames.map { f =>
-      val have = f.schema.fieldNames.toSet
-      f.select(ref.map(fd =>
-        (if (have.contains(fd.name)) col(fd.name) else lit(null))
-          .cast(fd.dataType).as(fd.name)): _*)
-    }
-    // CLOSING the walk-order window: a partition parked (and its
-    // replacement renamed in) BETWEEN the aside walk above and the
-    // live frame construction would have its NEW files listed and
-    // read cleanly — a silent mix, with no FNFE for the retry to
-    // classify (the vanish direction throws; the appear direction
-    // does not). The frames' file listings are fixed at construction
-    // (spark.read resolves its file index eagerly), so ONE re-walk of
-    // the aside and snapshot record set now is sufficient: any
-    // partition it decides that this compose read from LIVE was
-    // swapped inside the window — refuse retryably, and the retry
-    // resolves it through its parked copy. Parks after this re-check
-    // can only make the listed live files vanish, which IS classified.
-    val decidedNow = scala.collection.mutable.Set[String]()
-    val usableNow = partSnapshots(spark, base).filter { p =>
-      val s = partSnapshotStamp(new Path(p).getName).getOrElse(0L)
-      cut.forall(s > _) // same lineage cut — dead-lineage snapshots
-                        // must not flag live reads of reused rels
-    }
-    (usableNow ++
-      Some(PartitionSwap.asidePath(base)).filter(Fs.exists(spark, _)))
-      .foreach { root =>
-        PartitionSwap.bornParts(spark, root).foreach(decidedNow += _)
-        PartitionSwap.asideLeaves(spark, root)
-          .foreach { case (_, rel) => decidedNow += rel }
-      }
-    val torn = live.collect {
-      case (_, rel) if decidedNow.contains(rel) => rel
-    }
-    if (torn.nonEmpty)
-      throw new ConcurrentWriteException(
-        s"composed read of $base raced a partition swap mid-walk " +
-          s"(partition(s) ${torn.mkString(", ")} were parked between " +
-          "the snapshot walk and the live listing); retry")
-    Some(aligned.reduce(_ unionByName _))
-  }
 
   /** Age past which a lock is presumed crashed debris and may be
     * broken by the next acquirer (and swept by vacuum). */
@@ -465,7 +175,7 @@ object Txn {
     val waitMs = confMs(spark, LockWaitKey, LockWaitDefaultMs)
     val token = java.util.UUID.randomUUID().toString
     val lp = new Path(lockPath(base))
-    val fs = lp.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = Fs.fileSystem(spark, lp)
     requireAtomicCreate(spark, fs, base)
     val deadline = System.currentTimeMillis() + waitMs
     var statMisses = 0
@@ -678,7 +388,7 @@ object Txn {
     * vacuum sweep. None when unlocked. */
   def heldBy(spark: SparkSession, path: String): Option[(String, Long)] = {
     val lp = new Path(lockPath(path.stripSuffix("/")))
-    val fs = lp.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = Fs.fileSystem(spark, lp)
     try {
       val st = fs.getFileStatus(lp)
       val op =
@@ -745,6 +455,13 @@ object Txn {
           "between; re-read and re-plan")
   }
 
+  /** Spark task part-file naming (`part-00000-<uuid>…`): the data
+    * files every managed root holds. `{5,}` — the padding is %05d, so
+    * tasks past 99,999 (routine at the scale this engine targets)
+    * widen the digit run; an exact-5 match would stop classifying
+    * their genuine swap races. */
+  private val PartFileRe = "part-\\d{5,}-".r
+
   /** Is this the transient crash of a lock-free read that landed
     * inside a concurrent COW commit's two-rename swap window (root
     * briefly absent / dir briefly empty), or listed a file a
@@ -754,13 +471,6 @@ object Txn {
     * maintenance reader ([[MatView.refresh]], the streaming
     * replication/maintenance loops) to turn the microsecond window
     * into a bounded retry instead of a dead long-lived stream. */
-  /** Spark task part-file naming (`part-00000-<uuid>…`): the data
-    * files every managed root holds. `{5,}` — the padding is %05d, so
-    * tasks past 99,999 (routine at the scale this engine targets)
-    * widen the digit run; an exact-5 match would stop classifying
-    * their genuine swap races. */
-  private val PartFileRe = "part-\\d{5,}-".r
-
   private[graft] def isSwapWindowRace(e: Throwable): Boolean = {
     val seen = scala.collection.mutable.Set[Throwable]()
     // The raw-substring shape below fires on ANY exception text, so
@@ -824,6 +534,28 @@ object Txn {
       }
     }
     sys.error("unreachable")
+  }
+
+  /** Persist a mutation's scan of its own table WITHOUT sharing it.
+    * Spark's cache manager serves a persisted plan to every query
+    * whose plan contains the same subtree, so a plain `persist` of a
+    * table read hands each concurrent lock-free reader of that table
+    * the mutation's pre-swap state for as long as the mutation runs:
+    * from blocks still cached after the swap (a state older than the
+    * op log and change feed the reader sees next to it), or
+    * recomputed from the files the swap deleted, so that every
+    * [[retryTransient]] attempt made during the next mutation fails on
+    * that mutation's cache in turn. A filter on a per-call literal
+    * gives the cached plan a shape no other query has; the optimizer
+    * folds it away, so the cached scan costs the same. Frames derived
+    * from the returned one still hit the cache; unpersist it as
+    * usual. */
+  private[storage] def persistPrivate(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val tag = org.apache.spark.sql.functions.lit(
+      java.util.UUID.randomUUID().toString)
+    df.filter(tag === tag)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
   private def confMs(spark: SparkSession, key: String, dflt: Long): Long =

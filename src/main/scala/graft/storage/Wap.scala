@@ -74,6 +74,9 @@ object WriteAuditPublish {
     // replace this dir's content between the audit and the publish
     val stage = base + StagePrefix + "_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
+    // set when THIS run starts replacing the live table: only from
+    // then on can its stage be the only complete copy (see the catch)
+    var publishing = false
     try {
       df.write.format("parquet").mode("overwrite").save(stage)
       // audit what was WRITTEN: the staged files are the publish
@@ -93,6 +96,7 @@ object WriteAuditPublish {
         Txn.withTableLock(spark, base, "WAP_PUBLISH") {
           stageSnap.foreach(
             Txn.assertUnchanged(spark, base, _, "WAP publish"))
+          publishing = true
           GraftLog.overwriteSwap(spark, base, stage)
           GraftLog.append(spark, base, "WAP_PUBLISH", Nil)
         }
@@ -100,6 +104,7 @@ object WriteAuditPublish {
         // rename-aside, not delete-then-rename: a failure between a
         // delete and the rename would leave NEITHER the old output
         // nor the audited frame at base
+        publishing = true
         val old = base + "__graft_old"
         Fs.deleteChecked(spark, old)
         if (Fs.exists(spark, base)) Fs.renameChecked(spark, base, old)
@@ -115,16 +120,18 @@ object WriteAuditPublish {
       // untouched and no debris, the audit-failure contract. (If the
       // swap already consumed the stage, the delete is a no-op; a
       // hard crash skips this and vacuum sweeps the aged orphan.)
-      // GUARDED against the genuine mid-swap window (base absent AND
-      // an aside present): there the stage (or the aside) may be the
-      // ONLY complete copy — deleting it would turn a recoverable
+      // GUARDED against this run's OWN mid-swap window (base absent
+      // AND an aside present): there the stage (or the aside) may be
+      // the ONLY complete copy — deleting it would turn a recoverable
       // failure into data loss; vacuum heals that window instead. A
-      // base that simply never existed (failed FIRST publish to a
-      // fresh path) has nothing to lose — the stage cleans like any
-      // other refusal.
+      // run refused before publishing (say, its lock acquire landed
+      // in ANOTHER run's swap window) owns a stage no swap touched,
+      // and a base that simply never existed (failed FIRST publish to
+      // a fresh path) has nothing to lose — both clean like any other
+      // refusal.
       case e: Throwable =>
         try {
-          val midSwap = !Fs.exists(spark, base) &&
+          val midSwap = publishing && !Fs.exists(spark, base) &&
             (Fs.exists(spark, base + "__graft_old") ||
              Fs.exists(spark, base + "__old"))
           if (!midSwap) Fs.deleteChecked(spark, stage)

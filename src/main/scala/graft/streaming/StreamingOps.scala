@@ -1228,7 +1228,7 @@ object StreamingOps {
       var newest = -1L
       dirs.foreach { d =>
         val p = new org.apache.hadoop.fs.Path(d)
-        val hfs = p.getFileSystem(spark.sessionState.newHadoopConf())
+        val hfs = Fs.fileSystem(spark, p)
         try {
           val it = hfs.listFiles(p, true)
           while (it.hasNext) {
@@ -1311,11 +1311,11 @@ object StreamingOps {
       // past the timeout is exactly the edge) — the poll must stay a
       // reader by construction
       val snap = Txn.snapshotReadOnly(spark, meta.source)
-      val age = try Some(System.currentTimeMillis() -
+      val sidecar =
         new org.apache.hadoop.fs.Path(base + "/" + MatView.SidecarName)
-          .getFileSystem(spark.sessionState.newHadoopConf())
-          .getFileStatus(new org.apache.hadoop.fs.Path(
-            base + "/" + MatView.SidecarName)).getModificationTime)
+      val age = try Some(System.currentTimeMillis() -
+        Fs.fileSystem(spark, sidecar).getFileStatus(sidecar)
+          .getModificationTime)
       catch { case _: java.io.FileNotFoundException => None }
       frame("matview", meta.source,
         Some(meta.lastBatch).filter(_ != Long.MinValue),

@@ -238,22 +238,16 @@ class ConcurrencySpec extends AnyFunSuite with SparkSpec {
 
   test("soak: lock-free readers under a live mutator — read, time " +
       "travel, DESCRIBE DETAIL, history and change feed all succeed " +
-      "through Txn.retryReadSnapshot while merges and compactions land") {
+      "through Txn.retryTransient while merges and compactions land") {
     // The engine's documented reader contract: reads never lock, a
     // read landing in a COW commit's swap window (or racing a
-    // compactLog) may die transiently, and the bounded retry with the
-    // snapshot fallback (Txn.retryReadSnapshot) heals it. This soak
-    // validates the CLASSIFIER against every reader surface's real
-    // failure shapes — each race class the judges found (merge
-    // bootstrap, listing trigger, matview refresh, op-log footer vs
-    // compaction) surfaced exactly as an unclassified transient; an
-    // unclassified shape still fails here, because the fallback only
-    // engages on classified errors and the FIRST attempt is always
-    // the live root. Plain live-root retryTransient alone is NOT
-    // enough for this soak at extended durations (GRAFT_READER_SOAK_MS
-    // high): each attempt's plan-to-execute span re-exposes to the
-    // next swap, and 5 consecutive losses become statistically
-    // expected — which is precisely why the snapshot window exists.
+    // compactLog) may die transiently, and the bounded live-root
+    // retry (Txn.retryTransient) heals it. This soak validates the
+    // CLASSIFIER against every reader surface's real failure shapes —
+    // each race class found so far (merge bootstrap, listing trigger,
+    // matview refresh, op-log footer vs compaction) surfaced exactly
+    // as an unclassified transient; an unclassified shape still fails
+    // here, because the retry only engages on classified errors.
     val path = mkTable("txn_readers",
       (1L to 50L).map(i => i -> s"v$i"))
     // seed one captured merge so the feed and a travel stamp exist
@@ -275,14 +269,13 @@ class ConcurrencySpec extends AnyFunSuite with SparkSpec {
             path, "full.id = incremental.id", Nil,
             mergeSchemas = false, None, None, captureChanges = true)
           if (i % 3 == 0) Maintenance.compactLog(spark, path)
-          // a realistic commit cadence, not a tight loop: plain
+          // a realistic commit cadence, not a tight loop:
           // retryTransient re-reads the LIVE root each attempt, so
           // under back-to-back COW swaps a multi-second lazy read can
           // lose every retry (each attempt's plan-to-execute window
-          // overlaps a swap) — the tight-loop case is the
-          // snapshot-window soak below (Txn.retryReadSnapshot).
-          // Paced commits leave thin windows that the bounded retry
-          // heals — the live-root contract this soak pins.
+          // overlaps a swap). Paced commits leave thin windows that
+          // the bounded retry heals — the live-root contract this
+          // soak pins.
           Thread.sleep(400)
         }
       } catch { case t: Throwable => died.compareAndSet(null, t) }
@@ -294,26 +287,23 @@ class ConcurrencySpec extends AnyFunSuite with SparkSpec {
       var rounds = 0
       while (System.currentTimeMillis() < deadline && died.get() == null) {
         rounds += 1
-        // every surface resolves through the root the retry hands it:
-        // attempt 1 is the live path, fallbacks are the retained
-        // snapshot (a complete copy — data, op log, feed)
-        Txn.retryReadSnapshot(spark, path) { root =>
-          assert(st.read(root, "delta").count() >= 50L)
+        Txn.retryTransient(maxAttempts = 5) {
+          assert(st.read(path, "delta").count() >= 50L)
         }
-        Txn.retryReadSnapshot(spark, path) { root =>
+        Txn.retryTransient(maxAttempts = 5) {
           // the seeded stamp's pre-state: the original 50 rows
-          assert(Merge.readAsOf(spark, st, root, Seq("id"),
+          assert(Merge.readAsOf(spark, st, path, Seq("id"),
             stamp0 - 1).count() == 50L)
         }
-        Txn.retryReadSnapshot(spark, path) { root =>
-          val d = GraftLog.tableDetail(spark, root).head()
+        Txn.retryTransient(maxAttempts = 5) {
+          val d = GraftLog.tableDetail(spark, path).head()
           assert(d.getString(0) == "delta")
         }
-        Txn.retryReadSnapshot(spark, path) { root =>
-          assert(GraftLog.history(spark, root).count() >= 1L)
+        Txn.retryTransient(maxAttempts = 5) {
+          assert(GraftLog.history(spark, path).count() >= 1L)
         }
-        Txn.retryReadSnapshot(spark, path) { root =>
-          assert(Merge.changeFeed(spark, root)
+        Txn.retryTransient(maxAttempts = 5) {
+          assert(Merge.changeFeed(spark, path)
             .select(col("batch")).distinct().count() >= 1L)
         }
       }
@@ -323,342 +313,60 @@ class ConcurrencySpec extends AnyFunSuite with SparkSpec {
       s"the mutator died mid-soak: ${died.get()}")
   }
 
-  test("soak: snapshot-window reads survive a TIGHT-LOOP mutator — " +
-      "multi-second reads terminate via the retained-snapshot " +
-      "fallback where live-root retries would livelock") {
-    // The snapshot-window contract (Txn object doc): a completed COW
-    // swap retains the replaced root as an immutable sibling snapshot
-    // for SnapshotRetainKey ms. Under BACK-TO-BACK swaps (no pacing —
-    // the case the paced soak above documents as beyond plain
-    // retryTransient) a multi-second read keeps losing the live root,
-    // but the snapshot fallback's attempt reads a root nothing will
-    // ever mutate again, so it terminates with a recent committed
-    // state. The mutator here runs a TIGHT loop (no sleep) and the
-    // reader stretches each pass with a per-partition delay, so every
-    // live attempt's plan-to-execute span overlaps several swaps.
-    val path = mkTable("txn_snapread",
-      (1L to 50L).map(i => i -> s"v$i"))
-    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val died = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val mutator = new Thread(() => {
-      try {
-        var i = 0
-        while (!stop.get()) {
-          i += 1
-          Merge.run(spark, st,
-            Seq((i % 50 + 1L) -> s"m$i").toDF("id", "v"),
-            path, "full.id = incremental.id", Nil,
-            mergeSchemas = false, None, None)
-        }
-      } catch { case t: Throwable => died.compareAndSet(null, t) }
-    })
-    mutator.start()
-    val deadline = System.currentTimeMillis() +
-      sys.env.get("GRAFT_READER_SOAK_MS").map(_.toLong).getOrElse(10000L)
-    try {
-      var rounds = 0
-      while (System.currentTimeMillis() < deadline && died.get() == null) {
-        rounds += 1
-        // a deliberately slow read: each partition stalls before
-        // streaming, stretching execution across multiple swaps
-        val n = Txn.retryReadSnapshot(spark, path) { root =>
-          st.read(root, "delta").as[(Long, String)]
-            .mapPartitions { it => Thread.sleep(120); it }.count()
-        }
-        assert(n == 50L, s"every committed state holds 50 rows, got $n")
-        val h = Txn.retryReadSnapshot(spark, path) { root =>
-          GraftLog.history(spark, root).count()
-        }
-        assert(h >= 1L)
-      }
-      assert(rounds >= 3, s"soak too short to mean anything: $rounds")
-      // the window exists on disk while the mutator is hot
-      assert(Txn.snapshots(spark, path).nonEmpty,
-        "a hot writer must leave retained snapshots inside the window")
-    } finally { stop.set(true); mutator.join() }
-    assert(died.get() == null,
-      s"the mutator died mid-soak: ${died.get()}")
-    // expired snapshots are vacuum's: everything older than the
-    // window is planned for deletion, younger ones skip-reported
-    val plan = Maintenance.vacuum(spark, path, dryRun = true)
-    assert(plan.forall(a => a.kind != "delete" ||
-      !a.target.contains("__graft_snap_") ||
-      a.detail.contains("expired")), s"plan: $plan")
-  }
-
-  test("composed partition snapshot: a PartitionSwap commit retains " +
-      "its pre-swap partitions, and the composed read reconstructs " +
-      "the state before the oldest retained swap — born partitions " +
-      "excluded, full-root swaps superseding") {
-    val path = tempDir("txn_partsnap") + "/t"
-    val rows0 = (1L to 30L).map(i => (i, s"p${i % 3}", s"v$i"))
-    st.write(rows0.toDF("id", "part", "v"), path, "delta",
-      "overwrite", Seq("part"))
-    def norm(df: org.apache.spark.sql.DataFrame): Seq[(Long, String, String)] =
-      df.select("id", "part", "v").as[(Long, String, String)]
-        .collect().sortBy(_._1).toSeq
-    val before = norm(st.read(path, "delta"))
-    // partition-scoped delete (id 4 lives in p1): parks p1's old copy
-    assert(Delete.where(spark, st, path, "id = 4") == 1L)
-    assert(Txn.partSnapshots(spark, path).size == 1,
-      "the consumed aside must be retained as a partition snapshot")
-    val composed1 = Txn.composeSnapshot(spark, path)
-    assert(composed1.isDefined)
-    assert(norm(composed1.get) == before,
-      "the composed read must reconstruct the pre-swap state")
-    // a second swap on the same partition: the OLDEST copy still wins
-    assert(Delete.where(spark, st, path, "id = 7") == 1L)
-    assert(Txn.partSnapshots(spark, path).size == 2)
-    assert(norm(Txn.composeSnapshot(spark, path).get) == before,
-      "first-parked-wins: still the state before the OLDEST swap")
-    // attempt 1 of the composed retry reads the LIVE root
-    assert(Txn.retryReadComposed(spark, path)(_.count()) == 28L)
-    // a row MOVED into a brand-new partition: the born manifest must
-    // keep it out of the reconstruction (it would otherwise appear
-    // twice — old copy in parked p2, new copy in live p9)
-    st.merge(Seq((9L, "p9", "moved")).toDF("id", "part", "v"), path,
-      "full.id = incremental.id")
-    assert(norm(Txn.composeSnapshot(spark, path).get) == before,
-      "a partition born in the window must not leak into the " +
-        "pre-window reconstruction")
-    // the LIVE aside is the newest pseudo-snapshot: a swap caught
-    // mid-commit (originals parked, replacements already live, aside
-    // not yet retired) must resolve its partitions through the parked
-    // copies — without that, a compose constructed in the window
-    // would silently mix the new content into the "pre-swap" state.
-    // Reconstruct the window by hand: park p2's current copy in the
-    // aside, then alter live p2 (what the staged rename-in does).
-    val preAside = norm(Txn.composeSnapshot(spark, path).get)
-    val asideDir = PartitionSwap.asidePath(path)
-    Fs.copyDirChecked(spark, s"$path/part=p2", s"$asideDir/part=p2")
-    val fsH = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    fsH.delete(new org.apache.hadoop.fs.Path(s"$path/part=p2"), true)
-    spark.createDataFrame(java.util.Collections.singletonList(
-        org.apache.spark.sql.Row(9999L, "torn")),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("v",
-          org.apache.spark.sql.types.StringType))))
-      .write.parquet(s"$path/part=p2")
-    assert(norm(Txn.composeSnapshot(spark, path).get) == preAside,
-      "an in-flight swap's partitions must resolve through the live " +
-        "aside, never the already-swapped live content")
-    // put the table back (complete the 'swap' cleanly)
-    fsH.delete(new org.apache.hadoop.fs.Path(s"$path/part=p2"), true)
-    Fs.renameChecked(spark, s"$asideDir/part=p2", s"$path/part=p2")
-    Fs.deleteChecked(spark, asideDir)
-
-    // a full-root COW swap (overwrite) supersedes every older
-    // partition snapshot — the complete snapshot is the fallback
-    st.write(rows0.take(6).toDF("id", "part", "v"), path, "delta",
-      "overwrite", Seq("part"))
-    assert(Txn.composeSnapshot(spark, path).isEmpty,
-      "partition snapshots of a replaced lineage must not compose " +
-        "over the new live root")
-    assert(Txn.snapshots(spark, path).nonEmpty,
-      "the full-root swap retains its complete snapshot instead")
-    // vacuum: in-window partition snapshots are skip-reported, never
-    // deleted; everything is swept once expired
-    val plan = Maintenance.vacuum(spark, path, dryRun = true)
-    val partActions = plan.filter(_.target.contains("__graft_partsnap_"))
-    assert(partActions.nonEmpty && partActions.forall(_.kind == "skip"),
-      s"in-window partition snapshots must skip-report: $plan")
-    spark.conf.set(Txn.SnapshotRetainKey, "0")
-    try {
-      Maintenance.vacuum(spark, path, dryRun = false)
-      assert(Txn.partSnapshots(spark, path).isEmpty &&
-        Txn.snapshots(spark, path).isEmpty,
-        "expired snapshots of both shapes sweep in vacuum")
-    } finally spark.conf.unset(Txn.SnapshotRetainKey)
-  }
-
-  test("soak: composed reads over a PARTITIONED table survive a " +
-      "TIGHT-LOOP mutator — parked partition copies pin contended " +
-      "paths where live-root retries would livelock") {
-    // the partitioned twin of the snapshot-window soak: merges here
-    // commit through PartitionSwap (no full-root COW), so the
-    // full-root snapshot fallback never exists — the retained
-    // partition asides are the ONLY stable paths, and
-    // retryReadComposed overlays them on the untouched live dirs
-    val path = tempDir("txn_partread") + "/t"
-    st.write((1L to 50L).map(i => (i, s"p${i % 5}", s"v$i"))
-      .toDF("id", "part", "v"), path, "delta", "overwrite", Seq("part"))
-    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val died = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val mutator = new Thread(() => {
-      try {
-        var i = 0
-        while (!stop.get()) {
-          i += 1
-          val id = i % 50 + 1L
-          // update-only rotation across partitions: every committed
-          // (and every composed pre-window) state holds 50 rows
-          st.merge(Seq((id, s"p${id % 5}", s"m$i"))
-            .toDF("id", "part", "v"), path,
-            "full.id = incremental.id")
-        }
-      } catch { case t: Throwable => died.compareAndSet(null, t) }
-    })
-    mutator.start()
-    val deadline = System.currentTimeMillis() +
-      sys.env.get("GRAFT_READER_SOAK_MS").map(_.toLong).getOrElse(10000L)
-    try {
-      var rounds = 0
-      while (System.currentTimeMillis() < deadline && died.get() == null) {
-        rounds += 1
-        // a deliberately slow read stretching execution across many
-        // partition swaps
-        val n = Txn.retryReadComposed(spark, path) { df =>
-          df.as[(Long, String, String)]
-            .mapPartitions { it => Thread.sleep(120); it }.count()
-        }
-        assert(n == 50L, s"every consistent state holds 50 rows, got $n")
-      }
-      assert(rounds >= 3, s"soak too short to mean anything: $rounds")
-      assert(Txn.partSnapshots(spark, path).nonEmpty,
-        "a hot partition mutator must leave retained partition " +
-          "snapshots inside the window")
-    } finally { stop.set(true); mutator.join() }
-    assert(died.get() == null,
-      s"the mutator died mid-soak: ${died.get()}")
-  }
-
-  test("time travel on a RETAINED SNAPSHOT skips its frozen unmarked " +
-      "batch (never-applied by construction) instead of refusing") {
-    // a snapshot parked mid-capture keeps an unmarked batch dir and a
-    // lock-file copy FOREVER (the marker and the release land in the
-    // NEW live root) — travel there must neither retry on the frozen
-    // young lock nor refuse terminally once it ages
-    val path = mkTable("txn_snaptravel", (1L to 10L).map(i => i -> s"v$i"))
-    Merge.run(spark, st, Seq(1L -> "A").toDF("id", "v"), path,
-      "full.id = incremental.id", Nil, mergeSchemas = false, None,
-      None, captureChanges = true)
-    val stamp1 = Merge.changeFeed(spark, path)
-      .agg(max(col("batch"))).head().getLong(0)
-    Merge.run(spark, st, Seq(2L -> "B").toDF("id", "v"), path,
-      "full.id = incremental.id", Nil, mergeSchemas = false, None,
-      None, captureChanges = true)
-    val expected = Merge.readAsOf(spark, st, path, Seq("id"), stamp1)
-      .as[(Long, String)].collect().sortBy(_._1).toSeq
-    // park a frozen copy: the table as-is, PLUS an unmarked future
-    // batch (copied from a real one, marker removed) and a young lock
-    val snap = path + "__graft_snap_" + System.currentTimeMillis()
-    Fs.copyDirChecked(spark, path, snap)
-    val feedDir = snap + "/" + Merge.ChangesDirName
-    val stamps = Fs.listSubdirs(spark, feedDir)
-      .filter(_.startsWith("batch="))
-      .map(_.stripPrefix("batch=").toLong).sorted
-    val orphanStamp = stamps.max + 1000000L
-    Fs.copyDirChecked(spark, s"$feedDir/batch=${stamps.max}",
-      s"$feedDir/batch=$orphanStamp")
-    Fs.deleteChecked(spark,
-      s"$feedDir/batch=$orphanStamp/${Merge.ChangesCommitMarker}")
-    Fs.writeText(spark, Txn.lockPath(snap), "tok\nMERGE")
-    // the same travel answers identically on the frozen copy
-    val got = Merge.readAsOf(spark, st, snap, Seq("id"), stamp1)
-      .as[(Long, String)].collect().sortBy(_._1).toSeq
-    assert(got == expected,
-      s"snapshot travel must match the live answer: $got vs $expected")
-    // while the LIVE table with the same shape still refuses retryably
-    // (the ambiguity is real there)
-    Fs.copyDirChecked(spark,
-      s"$feedDir/batch=$orphanStamp",
-      s"$path/${Merge.ChangesDirName}/batch=$orphanStamp")
-    Txn.acquire(spark, path, "MERGE")
-    intercept[ConcurrentWriteException] {
-      Merge.readAsOf(spark, st, path, Seq("id"), stamp1).count()
+  test("commit swaps delete what they replace: a COW merge, a " +
+      "partition-scoped merge, an overwrite and vacuum leave nothing " +
+      "beside the table root") {
+    // every sibling of a managed root is named `<t>__…` (asides,
+    // staging, consumed asides, WAP stages) — after a completed
+    // mutation none may remain
+    def siblings(path: String): Seq[String] = {
+      val p = new org.apache.hadoop.fs.Path(path)
+      Fs.listSubdirs(spark, p.getParent.toString)
+        .filter(_.startsWith(p.getName + "__"))
     }
-    assert(Txn.breakLock(spark, path))
+    val flat = mkTable("txn_nosib_flat", (1L to 10L).map(i => i -> s"v$i"))
+    Merge.run(spark, st, Seq(1L -> "m", 11L -> "n").toDF("id", "v"), flat,
+      "full.id = incremental.id", Nil, mergeSchemas = false, None, None)
+    assert(siblings(flat).isEmpty,
+      s"a COW merge left siblings: ${siblings(flat)}")
+    val parted = tempDir("txn_nosib_part") + "/t"
+    st.write((1L to 12L).map(i => (i, s"p${i % 3}", s"v$i"))
+      .toDF("id", "part", "v"), parted, "delta", "overwrite", Seq("part"))
+    // an update in p1 plus a row born in a new partition
+    st.merge(Seq((1L, "p1", "m"), (99L, "p9", "n"))
+      .toDF("id", "part", "v"), parted, "full.id = incremental.id")
+    assert(siblings(parted).isEmpty,
+      s"a partition-scoped merge left siblings: ${siblings(parted)}")
+    st.write(Seq(5L -> "o").toDF("id", "v"), flat, "delta", "overwrite")
+    assert(siblings(flat).isEmpty,
+      s"an overwrite left siblings: ${siblings(flat)}")
+    Seq(flat, parted).foreach { p =>
+      Maintenance.vacuum(spark, p)
+      assert(siblings(p).isEmpty, s"vacuum left siblings: ${siblings(p)}")
+    }
+    assert(st.read(flat, "delta").as[(Long, String)].collect().toSeq ==
+      Seq(5L -> "o"))
+    assert(st.read(parted, "delta").count() == 13L)
   }
 
-  test("frozen-snapshot travel refuses an unmarked batch that cannot " +
-      "be the in-flight-at-park capture (crashed BEFORE the park)") {
-    // shape 1: an unmarked batch BELOW a committed one — a capture
-    // that crashed in the crashed-writer window (data swap landed,
-    // marker never written), later overtaken by a successful capture,
-    // then the root was parked. Its changes MAY be in the parked
-    // data; skipping it as never-applied would silently serve the
-    // wrong snapshot. Only the HIGHEST-stamp unmarked batch can be
-    // the capture stranded by the park.
-    val path = mkTable("txn_snapcrash", (1L to 10L).map(i => i -> s"v$i"))
-    Merge.run(spark, st, Seq(1L -> "A").toDF("id", "v"), path,
-      "full.id = incremental.id", Nil, mergeSchemas = false, None,
-      None, captureChanges = true)
-    val stamp1 = Merge.changeFeed(spark, path)
-      .agg(max(col("batch"))).head().getLong(0)
-    Merge.run(spark, st, Seq(2L -> "B").toDF("id", "v"), path,
-      "full.id = incremental.id", Nil, mergeSchemas = false, None,
-      None, captureChanges = true)
-    val snap = path + "__graft_snap_" + System.currentTimeMillis()
-    Fs.copyDirChecked(spark, path, snap)
-    val feedDir = snap + "/" + Merge.ChangesDirName
-    val stamps = Fs.listSubdirs(spark, feedDir)
-      .filter(_.startsWith("batch="))
-      .map(_.stripPrefix("batch=").toLong).sorted
-    // plant a crashed capture BETWEEN the two committed batches
-    // (unmarked, NOT the max stamp) plus the park's own in-flight
-    // capture above everything (unmarked, max stamp)
-    val crashedStamp = stamps.max - 1L
-    val inflightStamp = stamps.max + 1000000L
-    Fs.copyDirChecked(spark, s"$feedDir/batch=${stamps.max}",
-      s"$feedDir/batch=$crashedStamp")
-    Fs.deleteChecked(spark,
-      s"$feedDir/batch=$crashedStamp/${Merge.ChangesCommitMarker}")
-    Fs.copyDirChecked(spark, s"$feedDir/batch=${stamps.max}",
-      s"$feedDir/batch=$inflightStamp")
-    Fs.deleteChecked(spark,
-      s"$feedDir/batch=$inflightStamp/${Merge.ChangesCommitMarker}")
-    Fs.writeText(spark, Txn.lockPath(snap), "tok\nMERGE")
-    // travel below the crashed batch must refuse TERMINALLY — no
-    // retry can resolve a crash frozen into an immutable snapshot
-    val e = intercept[IllegalStateException] {
-      Merge.readAsOf(spark, st, snap, Seq("id"), stamp1).count()
-    }
-    assert(e.getMessage.contains(crashedStamp.toString) &&
-      !e.getMessage.contains(inflightStamp.toString),
-      s"the refusal must name the crashed batch only: ${e.getMessage}")
-    // while travel ABOVE the crashed batch still works, skipping only
-    // the in-flight max batch
-    val latest = Merge.readAsOf(spark, st, snap, Seq("id"), stamps.max)
-      .as[(Long, String)].collect().toMap
-    assert(latest(2L) == "B", "committed state must be served")
-  }
-
-  test("frozen-snapshot travel refuses an unmarked max batch when the " +
-      "root was parked by a NON-capturing mutation") {
-    // shape 2: the root was parked by OPTIMIZE — no capture can have
-    // been in flight at park time, so even the highest-stamp unmarked
-    // batch is a crashed capture from before the park (optimize
-    // writes no barrier, so the horizon check cannot fence it; the
-    // lock-op probe must)
-    val path = mkTable("txn_snapopt", (1L to 10L).map(i => i -> s"v$i"))
-    Merge.run(spark, st, Seq(1L -> "A").toDF("id", "v"), path,
-      "full.id = incremental.id", Nil, mergeSchemas = false, None,
-      None, captureChanges = true)
-    val stamp1 = Merge.changeFeed(spark, path)
-      .agg(max(col("batch"))).head().getLong(0)
-    Merge.run(spark, st, Seq(2L -> "B").toDF("id", "v"), path,
-      "full.id = incremental.id", Nil, mergeSchemas = false, None,
-      None, captureChanges = true)
-    val snap = path + "__graft_snap_" + System.currentTimeMillis()
-    Fs.copyDirChecked(spark, path, snap)
-    val feedDir = snap + "/" + Merge.ChangesDirName
-    val stamps = Fs.listSubdirs(spark, feedDir)
-      .filter(_.startsWith("batch="))
-      .map(_.stripPrefix("batch=").toLong).sorted
-    val orphanStamp = stamps.max + 1000000L
-    Fs.copyDirChecked(spark, s"$feedDir/batch=${stamps.max}",
-      s"$feedDir/batch=$orphanStamp")
-    Fs.deleteChecked(spark,
-      s"$feedDir/batch=$orphanStamp/${Merge.ChangesCommitMarker}")
-    Fs.writeText(spark, Txn.lockPath(snap), "tok\nOPTIMIZE")
-    val e = intercept[IllegalStateException] {
-      Merge.readAsOf(spark, st, snap, Seq("id"), stamp1).count()
-    }
-    assert(e.getMessage.contains(orphanStamp.toString),
-      s"the refusal must name the orphan batch: ${e.getMessage}")
+  test("a mutation's persisted scan of its table is private: a " +
+      "concurrent read of the table is never served from its cache") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    def cached(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.withCachedData
+        .collect { case r: InMemoryRelation => r }.nonEmpty
+    val path = mkTable("txn_private", (1L to 10L).map(i => i -> s"v$i"))
+    val scanned = Txn.persistPrivate(st.read(path, "delta"))
+    try {
+      assert(scanned.count() == 10L)
+      // the mutation's own derived frames reuse the blocks …
+      assert(cached(scanned.filter(col("id") > 3)))
+      // … while a reader's plan lists the live root itself: after the
+      // mutation's swap it must fail (and retry), not keep serving
+      // the pre-swap state
+      assert(!cached(st.read(path, "delta")))
+      assert(!cached(st.read(path, "delta").groupBy("v").count()))
+    } finally scanned.unpersist()
   }
 
   test("snapshotReadOnly reads a parked op log WITHOUT healing it — " +

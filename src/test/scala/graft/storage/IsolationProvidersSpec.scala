@@ -38,7 +38,19 @@ class IsolationProvidersSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("GIT_BRANCH provider returns this repo's branch") {
-    assert(IsolationProviders.gitBranch() == "main")
+    // in a checkout the provider agrees with git itself; in an export
+    // without a `.git` directory (a `git archive` tree) it refuses
+    // with the documented error
+    val cwd = new java.io.File(sys.props("user.dir")).getAbsoluteFile
+    val inCheckout = Iterator.iterate(cwd)(_.getParentFile)
+      .takeWhile(_ != null).exists(d => new java.io.File(d, ".git").exists)
+    if (inCheckout)
+      assert(IsolationProviders.gitBranch() == scala.sys.process
+        .Process(Seq("git", "branch", "--show-current")).!!.trim)
+    else {
+      val e = intercept[IllegalStateException](IsolationProviders.gitBranch())
+      assert(e.getMessage.startsWith("Not in a Git repository"))
+    }
   }
 
   test("context validation rejects path-like names") {

@@ -36,12 +36,6 @@ case class TtPropRow(id: Long, v: Long)
   * The invariant under test: the engine may forget history loudly,
   * never serve a snapshot that never existed.
   *
-  * Each seed's timeline is then checked a SECOND time against a
-  * retained snapshot of the end state parked MID-CAPTURE (unmarked
-  * max-stamp batch + young lock copy — what a COW park strands): the
-  * frozen-root classification must answer every stamp identically,
-  * skipping only the provably never-applied in-flight batch.
-  *
   * Model-side fence mirror: captured ops extend servable history;
   * uncaptured mutations BEFORE any feed era fold into the documented
   * `Long.MinValue` = "before the first captured batch" state (and the
@@ -352,57 +346,31 @@ class TimeTravelPropertySpec extends AnyFunSuite with SparkSpec {
           fenced()
       }
 
-      // the same three-way contract, checked against a given root
-      // (the live table, then the parked-mid-capture frozen copy)
-      def checkTimeline(root: String, what: String): Unit =
-        for (((stamp, snap), i) <- snapshots.zipWithIndex) {
-          val ctx = s"seed=$seed i=$i stamp=$stamp root=$what\n  " +
-            s"trace=${trace.mkString(" | ")}"
-          if (stamp < horizon) {
-            val msg = try {
-              Merge.readAsOf(spark, st, root, Seq("id"), stamp).collect()
-              None
-            } catch { case e: IllegalArgumentException => Some(e.getMessage) }
-            assert(msg.exists(_.contains("horizon")),
-              s"expected horizon refusal, got $msg — $ctx")
-          } else if (orphans.exists(_ > stamp)) {
-            val msg = try {
-              Merge.readAsOf(spark, st, root, Seq("id"), stamp).collect()
-              None
-            } catch { case e: IllegalStateException => Some(e.getMessage) }
-            assert(msg.exists(_.contains("commit marker")),
-              s"expected orphan refusal, got $msg — $ctx")
-          } else for (ck <- Seq(0, 2)) {
-            val got = Merge.readAsOf(spark, st, root, Seq("id"), stamp,
-                checkpointEvery = ck)
-              .as[TtPropRow].collect().map(r => r.id -> r.v).toMap
-            assert(got == snap, s"ck=$ck\n got=$got\n exp=$snap\n $ctx")
-          }
+      // the three-way contract, checked against the live table
+      for (((stamp, snap), i) <- snapshots.zipWithIndex) {
+        val ctx = s"seed=$seed i=$i stamp=$stamp\n  " +
+          s"trace=${trace.mkString(" | ")}"
+        if (stamp < horizon) {
+          val msg = try {
+            Merge.readAsOf(spark, st, path, Seq("id"), stamp).collect()
+            None
+          } catch { case e: IllegalArgumentException => Some(e.getMessage) }
+          assert(msg.exists(_.contains("horizon")),
+            s"expected horizon refusal, got $msg — $ctx")
+        } else if (orphans.exists(_ > stamp)) {
+          val msg = try {
+            Merge.readAsOf(spark, st, path, Seq("id"), stamp).collect()
+            None
+          } catch { case e: IllegalStateException => Some(e.getMessage) }
+          assert(msg.exists(_.contains("commit marker")),
+            s"expected orphan refusal, got $msg — $ctx")
+        } else for (ck <- Seq(0, 2)) {
+          val got = Merge.readAsOf(spark, st, path, Seq("id"), stamp,
+              checkpointEvery = ck)
+            .as[TtPropRow].collect().map(r => r.id -> r.v).toMap
+          assert(got == snap, s"ck=$ck\n got=$got\n exp=$snap\n $ctx")
         }
-
-      checkTimeline(path, "live")
-
-      // FROZEN-SNAPSHOT TRAVEL over the same random timeline: park the
-      // end state as a retained snapshot MID-CAPTURE — an unmarked
-      // batch stamped above every recorded stamp plus a young MERGE
-      // lock copy, exactly what a COW park strands (the marker and the
-      // release land in the new live root). Every recorded stamp must
-      // answer IDENTICALLY on the frozen root: horizon refusals and
-      // crashed-orphan refusals unchanged (a pre-park orphan is NOT
-      // the in-flight capture — below the max stamp — so the frozen
-      // classification keeps it terminally loud), and every servable
-      // stamp reconstructs its model snapshot with the in-flight
-      // batch classified never-applied instead of wedging on the
-      // never-releasing lock copy.
-      val snapRoot = path + Txn.SnapshotInfix + System.currentTimeMillis()
-      Fs.copyDirChecked(spark, path, snapRoot)
-      val inflight = Merge.nextBatchStamp()
-      trace += s"park(inflight=$inflight)"
-      Seq(TtPropRow(998L, 8L)).toDF()
-        .withColumn("_change_type", lit("insert"))
-        .write.parquet(s"$snapRoot/${Merge.ChangesDirName}/batch=$inflight")
-      Fs.writeText(spark, Txn.lockPath(snapRoot), "tok\nMERGE")
-      checkTimeline(snapRoot, "frozen")
+      }
     }
   }
 }
